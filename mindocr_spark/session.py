@@ -4,11 +4,22 @@ Local-mode testing uses ``local[N]``; the same config block is what a
 cluster ``spark-submit`` would carry (AQE on, Arrow on, sensible batch
 size). ``spark.sql.shuffle.partitions`` is sized to cores locally — on a
 real cluster leave it to AQE's coalescing.
+
+Driver memory: ``SPARK_GRAFT_DRIVER_MEM`` is used unchanged when set.
+Otherwise ``spark.driver.memory`` is a quarter of the host's physical
+memory (``MemTotal`` in ``/proc/meminfo``), never more than 16g. A
+quarter is HotSpot's own default maximum heap (``-XX:MaxRAMPercentage=25``)
+and leaves room for one Python worker per core and the JVM's off-heap
+memory. A fixed 16g default was larger than a 15.7 GiB, swap-less host:
+the heap grew until the kernel OOM-killed the JVM mid-way through the
+test suite, and every later Spark call failed. The 16g ceiling keeps
+hosts with 64 GB or more at that old default.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -18,6 +29,32 @@ from pyspark.sql import SparkSession
 #: amortize JVM↔python Arrow IPC (the dominant overhead at high
 #: parallelism); smaller batches bound worker memory for huge pages.
 ARROW_BATCH = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256"))  # measured best (BENCH.md method)
+
+#: Ceiling of the host-sized default driver heap, in MiB.
+DRIVER_MEM_CEILING_MB = 16 * 1024
+
+
+def host_memory_mb() -> int:
+    """The host's physical memory in MiB: ``MemTotal`` from
+    ``/proc/meminfo``, or ``sysconf`` where that file does not exist."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except FileNotFoundError:
+        pass
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (1024 * 1024)
+
+
+def driver_memory(mem_total_mb: int, env: Mapping[str, str] = os.environ) -> str:
+    """``spark.driver.memory`` for a host with ``mem_total_mb`` MiB:
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else a quarter of the host's
+    memory capped at :data:`DRIVER_MEM_CEILING_MB`."""
+    override = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    return f"{min(mem_total_mb // 4, DRIVER_MEM_CEILING_MB)}m"
 
 
 def get_spark(
@@ -37,7 +74,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory(host_memory_mb()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
