@@ -31,7 +31,8 @@ Stage map (reference capability → this module):
   whitespace normalization.
 
 No per-row Python escapes this module into the Spark plan: the Spark side
-calls :func:`extract_batch` once per Arrow batch.
+calls :func:`extract_document` for each document of an Arrow batch inside
+one ``mapInPandas`` (:mod:`mindocr_spark.operators.stages`).
 """
 
 from __future__ import annotations
@@ -206,9 +207,7 @@ class ParsedDoc:
     enough metadata to map results back to source space.
     """
 
-    tag_path: list[str] = field(default_factory=list)   # path at block start
     node_text: list[str] = field(default_factory=list)  # normalized text
-    depth: list[int] = field(default_factory=list)
     text_len: list[int] = field(default_factory=list)   # chars, normalized
     link_text_len: list[int] = field(default_factory=list)
     n_words: list[int] = field(default_factory=list)
@@ -228,7 +227,7 @@ class ParsedDoc:
 
 
 def _finish_block(doc: ParsedDoc, buf: list[str], link_chars: list[int],
-                  path: list[str], neg_depth: int, heading: bool,
+                  neg_depth: int, heading: bool,
                   src: list[int] | None = None) -> None:
     raw = "".join(buf)
     text = normalize_ws(raw)
@@ -246,9 +245,7 @@ def _finish_block(doc: ParsedDoc, buf: list[str], link_chars: list[int],
     stops = sum(1 for w in words if w.lower() in STOPWORDS)
     # ASCII fast path: the CJK regex cannot match ASCII text
     cjk = 0 if text.isascii() else len(_CJK_RE.findall(text))
-    doc.tag_path.append("/".join(path) if path else "")
     doc.node_text.append(text)
-    doc.depth.append(len(path))
     doc.text_len.append(len(text))
     doc.link_text_len.append(min(link, len(text)))
     doc.n_words.append(len(words))
@@ -275,13 +272,13 @@ def parse_html(html: bytes) -> ParsedDoc:
     text, doc.encoding = sniff_decode(html)
 
     stack: list[str] = []          # open block-context tags (subset: all tags)
+    n_open: dict[str, int] = {}    # name → occurrences in stack: O(1) membership
     buf: list[str] = []            # current block's raw text fragments
     link_chars = [0]               # normalized link chars in current block
     neg_depth = 0                  # nesting inside NEGATIVE_ANCESTORS
     a_depth = 0                    # nesting inside <a>
     head_depth = 0                 # inside <head> (content skipped)
     block_heading = False          # current block opened by h1..h6
-    block_path: list[str] = []     # tag path at block start
     block_src = [0, 0]             # decoded-source char span of current block
 
     i, n = 0, len(text)
@@ -290,8 +287,6 @@ def parse_html(html: bytes) -> ParsedDoc:
         if lt == -1:
             frag = text[i:]
             if frag and head_depth == 0:
-                if not buf:
-                    block_path = list(stack)
                 e = decode_entities(frag)
                 # non-empty after ws-collapse ⟺ has a non-ws char
                 if e and not e.isspace():
@@ -308,7 +303,6 @@ def parse_html(html: bytes) -> ParsedDoc:
                 e = decode_entities(frag)
                 if e and not e.isspace():
                     if not buf:
-                        block_path = list(stack)
                         block_src[0] = i
                     buf.append(e)
                     block_src[1] = lt
@@ -330,7 +324,6 @@ def parse_html(html: bytes) -> ParsedDoc:
             # stray '<' — treat as text
             if head_depth == 0:
                 if not buf:
-                    block_path = list(stack)
                     block_src[0] = i
                 buf.append("<")
                 block_src[1] = i + 1
@@ -350,15 +343,16 @@ def parse_html(html: bytes) -> ParsedDoc:
 
         is_block = name in BLOCK_TAGS
         if is_block and buf:
-            _finish_block(doc, buf, link_chars, block_path, neg_depth,
-                          block_heading, block_src)
+            _finish_block(doc, buf, link_chars, neg_depth, block_heading,
+                          block_src)
             block_heading = False
 
         if closing:
             # pop up to the matching open tag (tolerates misnesting)
-            if name in stack:
+            if n_open.get(name):
                 while stack:
                     top = stack.pop()
+                    n_open[top] -= 1
                     if top in NEGATIVE_ANCESTORS:
                         neg_depth -= 1
                     if top == "a":
@@ -374,10 +368,12 @@ def parse_html(html: bytes) -> ParsedDoc:
                 continue
             # HTML5 optional end tag: <body> implicitly closes an open
             # <head> (a crawled page may legally omit </head>; without
-            # this the whole body would be skipped as head content)
-            if name == "body" and head_depth > 0 and "head" in stack:
+            # this the whole body would be skipped as head content).
+            # head_depth counts the <head> entries on the stack.
+            if name == "body" and head_depth > 0:
                 while stack:
                     top = stack.pop()
+                    n_open[top] -= 1
                     if top in NEGATIVE_ANCESTORS:
                         neg_depth -= 1
                     if top == "a":
@@ -386,6 +382,7 @@ def parse_html(html: bytes) -> ParsedDoc:
                         head_depth -= 1
                         break
             stack.append(name)
+            n_open[name] = n_open.get(name, 0) + 1
             if name in NEGATIVE_ANCESTORS:
                 neg_depth += 1
             if name == "a":
@@ -395,8 +392,8 @@ def parse_html(html: bytes) -> ParsedDoc:
             if is_block:
                 block_heading = name in ("h1", "h2", "h3", "h4", "h5", "h6")
     if buf:
-        _finish_block(doc, buf, link_chars, block_path, neg_depth,
-                      block_heading, block_src)
+        _finish_block(doc, buf, link_chars, neg_depth, block_heading,
+                      block_src)
     return doc
 
 
@@ -741,7 +738,7 @@ def assemble_text(
 
 
 # --------------------------------------------------------------------------
-# Whole-document and whole-batch drivers
+# Whole-document driver
 # --------------------------------------------------------------------------
 
 
@@ -753,12 +750,3 @@ def extract_document(html: bytes, params: ExtractParams = DEFAULT_PARAMS) -> Ext
     blocks = run_detector(raw, smoothed, doc.text_len, params)
     return assemble_text(doc, blocks, params)
 
-
-def extract_batch(
-    htmls: list[bytes], params: ExtractParams = DEFAULT_PARAMS
-) -> list[Extraction]:
-    """Batch driver: a Python loop over *documents within an Arrow batch*,
-    which is exactly the reference's per-batch loop shape
-    (mindocr/postprocess/det_db_postprocess.py:77-85). Per-node work inside
-    each document is numpy-vectorized."""
-    return [extract_document(h, params) for h in htmls]

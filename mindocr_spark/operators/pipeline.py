@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from mindocr_spark import extract_core as core
 from mindocr_spark.operators.stages import extract_stage
-from mindocr_spark.operators.registry import build_pipeline
 
 
 def prepare_input(
@@ -40,14 +39,11 @@ def prepare_input(
 def run_extraction(
     pages: DataFrame,
     params: core.ExtractParams = core.DEFAULT_PARAMS,
-    staged: bool = False,
     salt_partitions: int | None = None,
     size_ordered: bool = False,
 ) -> DataFrame:
     """The flagship query: extract main content for every page."""
     pages = prepare_input(pages, salt_partitions, size_ordered)
-    if staged:
-        return build_pipeline(params=params)(pages)
     return extract_stage(pages, params)
 
 
@@ -381,9 +377,12 @@ def _write_manifest(fs: _FS, path: str, run_id: str, fields: dict) -> int:
 
 def _load_manifests(fs: _FS, path: str) -> list[dict]:
     """All VALID manifests under `path`, ascending seq. A manifest is
-    valid iff it parses as JSON and its embedded md5 matches its body —
-    a torn create (crash mid-write on a filesystem without atomic
-    creates) fails the checksum and is treated as never-committed."""
+    valid iff it parses as a JSON object and its embedded md5 matches its
+    body — a torn create (crash mid-write on a filesystem without atomic
+    creates) fails the parse or the checksum and is treated as
+    never-committed. A READ error is not a verdict on the file: it
+    propagates, so a transient I/O failure can never silently serve an
+    older snapshot."""
     import hashlib
     import json
 
@@ -392,16 +391,19 @@ def _load_manifests(fs: _FS, path: str) -> list[dict]:
     for name in fs.list_names(mdir):
         if _manifest_seq(name) is None:
             continue
+        data = fs.read_bytes(f"{mdir}/{name}")
         try:
-            doc = json.loads(fs.read_bytes(f"{mdir}/{name}"))
-            body = {k: v for k, v in doc.items() if k != "md5"}
-            digest = hashlib.md5(
-                json.dumps(body, sort_keys=True).encode()
-            ).hexdigest()
-            if digest == doc.get("md5"):
-                out.append(doc)
-        except Exception:
+            doc = json.loads(data)  # UnicodeDecodeError is a ValueError
+        except ValueError:
             continue  # torn or foreign file → not a commit
+        if not isinstance(doc, dict):
+            continue
+        body = {k: v for k, v in doc.items() if k != "md5"}
+        digest = hashlib.md5(
+            json.dumps(body, sort_keys=True).encode()
+        ).hexdigest()
+        if digest == doc.get("md5"):
+            out.append(doc)
     return sorted(out, key=lambda d: d["seq"])
 
 

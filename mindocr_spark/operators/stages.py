@@ -1,11 +1,14 @@
-"""Pipeline stages as mapInPandas factories.
+"""The fused extraction stage: parse→score→detect→assemble in ONE narrow
+``mapInPandas``.
 
-Every stage is a *narrow* transformation: ``DataFrame → DataFrame`` with
-no shuffle. The Python inside each stage loops over documents **within an
-Arrow batch** (the reference's own per-batch loop shape,
+The Python inside the stage loops over documents **within an Arrow
+batch** (the reference's own per-batch loop shape,
 reference: mindocr/postprocess/det_db_postprocess.py:77-85); per-node work
 is numpy-vectorized inside :mod:`mindocr_spark.extract_core`. No per-row
-Python UDFs anywhere.
+Python UDFs anywhere, and no intermediate arrays cross Arrow: the
+per-document function (``extract_document``, or a plan composed by
+:func:`mindocr_spark.operators.registry.build_pipeline`) runs whole
+inside the batch loop.
 
 Failure semantics: a document that raises marks ``failed=true`` and flows
 through with empty output instead of killing the job — the reference's
@@ -17,17 +20,16 @@ every node's process()).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass
+from functools import partial
 from typing import Callable
 
-import numpy as np
 import pandas as pd
 
 from mindocr_spark import extract_core as core
 
 # --------------------------------------------------------------------------
-# Schemas (DDL strings — the explicit per-stage column contract, the analog
-# of the reference's output_columns declarations,
+# Output schema (DDL string — the explicit column contract, the analog of
+# the reference's output_columns declarations,
 # reference: configs/det/dbnet/db_r50_icdar15.yaml:111-114)
 # --------------------------------------------------------------------------
 
@@ -37,22 +39,6 @@ SPANS_DDL = (
     "score:double>>"
 )
 
-PARSE_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, "
-    "tag_path array<string>, node_text array<string>, depth array<int>, "
-    "text_len array<int>, link_text_len array<int>, n_words array<int>, "
-    "stop_words array<int>, cjk_chars array<int>, in_negative array<boolean>, "
-    "heading array<boolean>, src_start array<bigint>, src_end array<bigint>, "
-    "provenance struct<total_bytes:bigint,n_nodes:int,encoding:string,"
-    "total_text_chars:bigint>, failed boolean"
-)
-
-SCORE_SCHEMA = PARSE_SCHEMA + ", raw_score array<double>, smoothed_score array<double>"
-
-DETECT_SCHEMA = (
-    SCORE_SCHEMA + ", blocks array<struct<node_start:int,node_end:int,score:double>>"
-)
-
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, lang string, extracted_text string, "
     f"spans {SPANS_DDL}, n_blocks int, boilerplate_ratio double, "
@@ -60,184 +46,10 @@ EXTRACT_SCHEMA = (
 )
 
 
-def _empty_parse_row(url, ts, lang, nbytes: int) -> dict:
-    return dict(
-        url=url, warc_ts=ts, lang=lang,
-        tag_path=[], node_text=[], depth=[], text_len=[], link_text_len=[],
-        n_words=[], stop_words=[], cjk_chars=[], in_negative=[], heading=[],
-        src_start=[], src_end=[],
-        provenance=dict(total_bytes=nbytes, n_nodes=0, encoding="utf-8",
-                        total_text_chars=0),
-        failed=True,
-    )
-
-
-# --------------------------------------------------------------------------
-# Stage A — parse (DecodeImage analog)
-# --------------------------------------------------------------------------
-
-
-def parse_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
-    """pages(url, warc_ts, html, lang) → flattened DOM arrays."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for url, ts, html, lang in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-            ):
-                try:
-                    d = core.parse_html(bytes(html))
-                    out.append(dict(
-                        url=url, warc_ts=ts, lang=lang,
-                        tag_path=d.tag_path, node_text=d.node_text,
-                        depth=d.depth, text_len=d.text_len,
-                        link_text_len=d.link_text_len, n_words=d.n_words,
-                        stop_words=d.stop_words, cjk_chars=d.cjk_chars,
-                        in_negative=d.in_negative, heading=d.heading,
-                        src_start=d.src_start, src_end=d.src_end,
-                        provenance=dict(
-                            total_bytes=d.total_bytes, n_nodes=d.n_nodes,
-                            encoding=d.encoding,
-                            total_text_chars=d.total_text_chars,
-                        ),
-                        failed=False,
-                    ))
-                except Exception:
-                    out.append(_empty_parse_row(url, ts, lang, len(html or b"")))
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.select("url", "warc_ts", "html", "lang").mapInPandas(
-        fn, schema=PARSE_SCHEMA
-    )
-
-
-@dataclass
-class _Doc:
-    """Minimal ParsedDoc view reconstructed from staged columns."""
-
-    text_len: list
-    link_text_len: list
-    n_words: list
-    stop_words: list
-    cjk_chars: list
-    in_negative: list
-    heading: list
-    node_text: list
-
-    @property
-    def n_nodes(self) -> int:
-        return len(self.text_len)
-
-
-def _doc_from_row(row: dict) -> _Doc:
-    return _Doc(
-        text_len=row["text_len"], link_text_len=row["link_text_len"],
-        n_words=row["n_words"], stop_words=row["stop_words"],
-        cjk_chars=row["cjk_chars"], in_negative=row["in_negative"],
-        heading=row["heading"], node_text=row["node_text"],
-    )
-
-
-def _per_row_stage(df, schema: str, fn_row: Callable[[dict], dict], cols=None):
-    cols = cols or df.columns
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = pdf.to_dict("records")
-            if rows:
-                yield pd.DataFrame([fn_row(r) for r in rows])
-
-    return df.select(*cols).mapInPandas(fn, schema=schema)
-
-
-# --------------------------------------------------------------------------
-# Stage B — score (DBHead + FPN analog)
-# --------------------------------------------------------------------------
-
-
-def score_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
-    def fn_row(r: dict) -> dict:
-        raw, sm = core.score_nodes(_doc_from_row(r), params)
-        r["raw_score"] = raw.tolist()
-        r["smoothed_score"] = sm.tolist()
-        return r
-
-    return _per_row_stage(df, SCORE_SCHEMA, fn_row)
-
-
-# --------------------------------------------------------------------------
-# Stage C — detect (DBPostprocess analog)
-# --------------------------------------------------------------------------
-
-
-def detect_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
-    def fn_row(r: dict) -> dict:
-        blocks = core.run_detector(
-            np.asarray(r["raw_score"], dtype=np.float64),
-            np.asarray(r["smoothed_score"], dtype=np.float64),
-            np.asarray(r["text_len"], dtype=np.int64),
-            params,
-        )
-        r["blocks"] = [
-            dict(node_start=s, node_end=e, score=sc) for s, e, sc in blocks
-        ]
-        return r
-
-    return _per_row_stage(df, DETECT_SCHEMA, fn_row)
-
-
-# --------------------------------------------------------------------------
-# Stage D — assemble (CTC decode + sorted_boxes + CollectNode analog)
-# --------------------------------------------------------------------------
-
-
-def assemble_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
-    def fn_row(r: dict) -> dict:
-        doc = core.ParsedDoc(
-            node_text=list(r["node_text"]), text_len=list(r["text_len"]),
-            src_start=[int(x) for x in r["src_start"]],
-            src_end=[int(x) for x in r["src_end"]],
-        )
-        doc.total_text_chars = int(r["provenance"]["total_text_chars"])
-        doc.total_bytes = int(r["provenance"]["total_bytes"])
-        doc.encoding = r["provenance"]["encoding"]
-        blocks = [
-            (int(b["node_start"]), int(b["node_end"]), float(b["score"]))
-            for b in r["blocks"]
-        ]
-        ex = core.assemble_text(doc, blocks, params)
-        return dict(
-            url=r["url"], warc_ts=r["warc_ts"], lang=r["lang"],
-            extracted_text=ex.extracted_text,
-            spans=[
-                dict(block_id=b, node_start=s, node_end=e,
-                     char_start=cs, char_end=ce, src_start=ss, src_end=se,
-                     score=sc)
-                for b, s, e, cs, ce, ss, se, sc in ex.spans
-            ],
-            n_blocks=ex.n_blocks, boilerplate_ratio=ex.boilerplate_ratio,
-            n_nodes=int(r["provenance"]["n_nodes"]),
-            total_bytes=int(r["provenance"]["total_bytes"]),
-            encoding=r["provenance"]["encoding"], failed=bool(r["failed"]),
-        )
-
-    return _per_row_stage(df, EXTRACT_SCHEMA, fn_row)
-
-
-# --------------------------------------------------------------------------
-# Fused end-to-end stage (the production path: zero shuffles)
-# --------------------------------------------------------------------------
-
-
-def extract_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
-    """pages → final extractions in ONE narrow mapInPandas.
-
-    The whole det→rec→layout chain runs per Arrow batch with no
-    intermediate materialization; Catalyst prunes the scan to exactly
-    (url, warc_ts, html, lang).
-    """
+def map_extract(df, extract: Callable[[bytes], core.Extraction]):
+    """pages → final extractions, running ``extract`` on every page's
+    html inside one ``mapInPandas``. Catalyst prunes the scan to exactly
+    (url, warc_ts, html, lang)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -256,7 +68,7 @@ def extract_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
             failed = [False] * n
             for i, html in enumerate(pdf["html"]):
                 try:
-                    ex = core.extract_document(bytes(html), params)
+                    ex = extract(bytes(html))
                     texts[i] = ex.extracted_text
                     spans[i] = [
                         dict(block_id=b, node_start=s, node_end=e,
@@ -284,3 +96,9 @@ def extract_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
     return df.select("url", "warc_ts", "html", "lang").mapInPandas(
         fn, schema=EXTRACT_SCHEMA
     )
+
+
+def extract_stage(df, params: core.ExtractParams = core.DEFAULT_PARAMS):
+    """pages → final extractions with :func:`extract_core.extract_document`
+    (the production path: zero shuffles)."""
+    return map_extract(df, partial(core.extract_document, params=params))

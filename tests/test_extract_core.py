@@ -32,8 +32,6 @@ class TestParse:
             "across the valley as they walked home.",
             "© 2024 Acme",
         ]
-        assert d.tag_path[0] == "html/body/nav/ul/li/a"
-        assert d.tag_path[2] == "html/body/main/h1"
         assert d.text_len == [4, 5, 25, 114, 96, 11]
         assert d.link_text_len == [4, 5, 0, 0, 0, 0]
         assert d.n_words == [1, 1, 5, 24, 20, 2]
@@ -215,6 +213,51 @@ class TestDeterminism:
             e2 = core.extract_document(p2["html"])
             assert e1.extracted_text.encode() == e2.extracted_text.encode()
             assert e1.spans == e2.spans
+
+
+class TestBoundedWork:
+    """Hostile HTML gets linear time and bounded memory per page: an
+    unmatched close tag must not scan the open-tag stack, and a block
+    must not copy it."""
+
+    SHAPES = {
+        # n unclosed block tags, then n close tags that match none of them
+        "unmatched_close": lambda n: b"<div>" * n + b"</span>" * n,
+        # n nested blocks, each holding text
+        "deep_blocks": lambda n: b"<div>x " * n,
+    }
+
+    @staticmethod
+    def _best_time(html: bytes, repeats: int = 3) -> float:
+        import time
+
+        best = float("inf")
+        for _ in range(repeats):
+            t0 = time.perf_counter()
+            core.parse_html(html)
+            best = min(best, time.perf_counter() - t0)
+        return best
+
+    @pytest.mark.parametrize("shape", sorted(SHAPES))
+    def test_near_linear_time(self, shape):
+        make = self.SHAPES[shape]
+        n = 16000
+        core.parse_html(make(n))  # warm caches outside the timed runs
+        ratio = self._best_time(make(2 * n)) / self._best_time(make(n))
+        assert ratio < 3, f"t(2n)/t(n) = {ratio:.2f} on {shape}"
+
+    @pytest.mark.parametrize("shape", sorted(SHAPES))
+    def test_bounded_peak_memory(self, shape):
+        import tracemalloc
+
+        html = self.SHAPES[shape](16000)
+        tracemalloc.start()
+        try:
+            core.parse_html(html)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 64 * len(html), f"{peak} B peak for {len(html)} B"
 
 
 class TestReviewRegressions:

@@ -32,9 +32,9 @@ def test_parse_total_and_invariant(html):
     doc = core.parse_html(html)
     n = doc.n_nodes
     # parallel arrays stay parallel
-    for arr in (doc.tag_path, doc.depth, doc.text_len, doc.link_text_len,
-                doc.n_words, doc.stop_words, doc.cjk_chars, doc.in_negative,
-                doc.heading, doc.src_start, doc.src_end):
+    for arr in (doc.text_len, doc.link_text_len, doc.n_words,
+                doc.stop_words, doc.cjk_chars, doc.in_negative, doc.heading,
+                doc.src_start, doc.src_end):
         assert len(arr) == n
     text, _ = core.sniff_decode(html)
     for i in range(n):

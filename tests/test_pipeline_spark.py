@@ -1,5 +1,5 @@
-"""Spark-side parity + plumbing tests: fused ≡ staged ≡ in-process spec,
-failure isolation, metrics aggregation, plan shape."""
+"""Spark-side parity + plumbing tests: fused stage ≡ registry plan ≡
+in-process spec, failure isolation, metrics aggregation, plan shape."""
 
 import pandas as pd
 import pytest
@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from mindocr_spark.corpus import generate_page, pages_dataframe
 from mindocr_spark.extract_core import extract_document
 from mindocr_spark.operators.pipeline import extraction_metrics, run_extraction
+from mindocr_spark.operators.registry import compose
 
 N = 120
 
@@ -21,6 +22,14 @@ def golden():
     return out
 
 
+def _span_tuples(row) -> list:
+    return [
+        (s["block_id"], s["node_start"], s["node_end"], s["char_start"],
+         s["char_end"], s["src_start"], s["src_end"], s["score"])
+        for s in row["spans"]
+    ]
+
+
 def test_fused_byte_identical(spark, golden):
     res = run_extraction(pages_dataframe(spark, N, seed=42)).collect()
     assert len(res) == N
@@ -29,23 +38,34 @@ def test_fused_byte_identical(spark, golden):
         assert r["extracted_text"].encode() == g.extracted_text.encode()
         assert r["n_blocks"] == g.n_blocks
         assert r["boilerplate_ratio"] == g.boilerplate_ratio
-        got_spans = [
-            (s["block_id"], s["node_start"], s["node_end"],
-             s["char_start"], s["char_end"], s["src_start"], s["src_end"],
-             s["score"]) for s in r["spans"]
-        ]
-        assert got_spans == g.spans
+        assert _span_tuples(r) == g.spans
         assert not r["failed"]
 
 
-def test_staged_equals_fused(spark):
-    pages = pages_dataframe(spark, 60, seed=42)
-    fused = {r["url"]: r for r in run_extraction(pages).collect()}
-    staged = {r["url"]: r for r in run_extraction(pages, staged=True).collect()}
-    assert fused.keys() == staged.keys()
-    for u in fused:
-        assert fused[u]["extracted_text"] == staged[u]["extracted_text"]
-        assert fused[u]["spans"] == staged[u]["spans"]
+def test_registry_plan_equals_extract_document(golden):
+    """The default registry plan, composed in process, is the spec: equal
+    to extract_document on every golden page (no JVM needed)."""
+    extract = compose()
+    for url, (page, g) in golden.items():
+        assert extract(page["html"]) == g, url
+
+
+def test_registry_rejects_bad_plans():
+    """A plan must run parse, score, detect, assemble once each, in
+    order; an unknown stage name is a KeyError. Both fail when the
+    pipeline is built, before any DataFrame exists."""
+    from mindocr_spark.operators.registry import build_pipeline
+
+    for plan in (
+        ["parse", "detect", "score", "assemble"],
+        ["parse", "score", "detect"],
+        ["parse", "score", "detect", "assemble", "assemble"],
+        [{"parse": {}}, "score", {"assemble": {}}, {"detect": {}}],
+    ):
+        with pytest.raises(ValueError):
+            build_pipeline(plan)
+    with pytest.raises(KeyError):
+        build_pipeline(["parse", "score", "bogus", "assemble"])
 
 
 def test_failure_isolation(spark):
@@ -124,10 +144,11 @@ def test_registry_param_overrides(spark):
     assert out == base
 
 
-def test_staged_fused_adversarial_parity(spark):
-    """Staged and fused paths agree byte-for-byte on adversarial tag
-    soup (not just the clean corpus): misnesting, raw-text traps,
-    entities, omitted </head>, stray '<', empty bodies."""
+def test_adversarial_parity(spark):
+    """The fused stage and the composed registry plan each equal
+    extract_document byte-for-byte on adversarial tag soup (not just the
+    clean corpus): misnesting, raw-text traps, entities, omitted
+    </head>, stray '<', empty bodies."""
     frags = [
         b"<html><head><title>t</title><body><p>no head close "
         b"but the content here is long enough to score as a block with "
@@ -149,12 +170,18 @@ def test_staged_fused_adversarial_parity(spark):
 
     pages = spark.createDataFrame(rows, PAGES_SCHEMA_DDL)
     fused = {r["url"]: r for r in run_extraction(pages).collect()}
-    staged = {r["url"]: r for r in run_extraction(pages, staged=True).collect()}
-    assert fused.keys() == staged.keys()
-    for u in fused:
-        assert fused[u]["extracted_text"] == staged[u]["extracted_text"], u
-        assert fused[u]["spans"] == staged[u]["spans"], u
-        assert fused[u]["boilerplate_ratio"] == staged[u]["boilerplate_ratio"], u
+    assert sorted(fused) == sorted(u for u, *_ in rows)
+    extract = compose()
+    for u, _, html, _, _ in rows:
+        want = extract_document(html)
+        got = extract(html)
+        assert got.extracted_text.encode() == want.extracted_text.encode(), u
+        assert got.spans == want.spans, u
+        assert got.boilerplate_ratio == want.boilerplate_ratio, u
+        r = fused[u]
+        assert r["extracted_text"].encode() == want.extracted_text.encode(), u
+        assert _span_tuples(r) == want.spans, u
+        assert r["boilerplate_ratio"] == want.boilerplate_ratio, u
 
 
 def test_write_results_observed_global_metrics(spark, tmp_path):
@@ -346,6 +373,52 @@ def test_wap_crash_recovery_no_renames(spark, tmp_path, monkeypatch):
     # GC swept the orphan stage dir and the torn manifest
     assert not (tmp_path / "out" / "_data" / "rY").exists()
     assert not (mdir / "manifest-0000000099-rX.json").exists()
+
+
+def test_load_manifests_fails_closed():
+    """Only an unparseable or checksum-failing manifest is skipped as
+    never-committed; an I/O error while READING one propagates, so a
+    transient failure cannot silently serve an older snapshot. In-memory
+    filesystem, no JVM."""
+    import json
+
+    from mindocr_spark.operators.pipeline import (
+        _load_manifests,
+        _write_manifest,
+    )
+
+    class MemFS:
+        def __init__(self):
+            self.files: dict[str, bytes] = {}
+            self.broken: set[str] = set()
+
+        def write_bytes(self, path, data):
+            self.files[path] = data
+
+        def read_bytes(self, path):
+            if path in self.broken:
+                raise OSError(f"read failed: {path}")
+            return self.files[path]
+
+        def list_names(self, path):
+            return sorted(p.rsplit("/", 1)[1] for p in self.files
+                          if p.rsplit("/", 1)[0] == path)
+
+    fs = MemFS()
+    assert _write_manifest(fs, "t", "r1", {"data_dir": "r1"}) == 1
+    mdir = "t/_manifests"
+    torn = json.dumps({"seq": 2, "run_id": "r2", "data_dir": "r2"})[:25]
+    fs.write_bytes(f"{mdir}/manifest-0000000002-r2.json", torn.encode())
+    fs.write_bytes(f"{mdir}/manifest-0000000003-r3.json", b"\xff\xfe[1]")
+    fs.write_bytes(f"{mdir}/manifest-0000000004-r4.json", b"[1, 2]")
+    bad_md5 = {"seq": 5, "run_id": "r5", "md5": "0" * 32}
+    fs.write_bytes(f"{mdir}/manifest-0000000005-r5.json",
+                   json.dumps(bad_md5).encode())
+    assert [m["run_id"] for m in _load_manifests(fs, "t")] == ["r1"]
+
+    fs.broken.add(f"{mdir}/manifest-0000000001-r1.json")
+    with pytest.raises(OSError):
+        _load_manifests(fs, "t")
 
 
 def test_compaction_executes_plan_and_commits_new_snapshot(spark, tmp_path):

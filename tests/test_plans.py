@@ -26,6 +26,73 @@ def sf(sf_dir):
     return sf_dir
 
 
+#: Aggregate grouping keys with an audited bounded domain: `__rg_pid` ≤
+#: shuffle partitions (the ranked_global offsets frame), `__ckpt_b` ≤
+#: n_checkpoints (heaps_fit).
+BOUNDED_GROUPING = {"__rg_pid", "__ckpt_b"}
+
+
+def _walk(node):
+    yield node
+    ch = node.children()
+    for i in range(ch.size()):
+        yield from _walk(ch.apply(i))
+
+
+def _bounded(node) -> bool:
+    """The recursive cardinality rule of
+    test_no_single_partition_window_over_unbounded_relation."""
+    name = node.getClass().getSimpleName()
+    if name in ("GlobalLimit", "LocalLimit", "LocalRelation",
+                "OneRowRelation"):
+        return True
+    if name == "Generate":
+        return False
+    ch = node.children()
+    if name == "Aggregate":
+        ge = node.groupingExpressions()
+        if ge.size() == 0:
+            return True
+        names = set()
+        for j in range(ge.size()):
+            m = re.match(
+                r"^'?([A-Za-z_][A-Za-z0-9_]*)#\d+",
+                ge.apply(j).toString())
+            names.add(m.group(1) if m else "?")
+        if names <= BOUNDED_GROUPING:
+            return True
+        return ch.size() > 0 and _bounded(ch.apply(0))
+    if ch.size() == 0:
+        return False  # scans, LogicalRDD, streaming sources
+    return all(_bounded(ch.apply(i)) for i in range(ch.size()))
+
+
+def _unbounded_global_windows(optimized_plan) -> int:
+    """Unpartitioned Window nodes whose input is not provably bounded."""
+    return sum(
+        1 for node in _walk(optimized_plan)
+        if node.getClass().getSimpleName() == "Window"
+        and node.partitionSpec().size() == 0
+        and not _bounded(node.children().apply(0)))
+
+
+@pytest.fixture(scope="module")
+def query_plan_checks(spark, sf):
+    """Both registry-wide sweeps from ONE build of every driver-contract
+    query: name → (executed plan has BatchEvalPython, unbounded
+    single-partition Window count in the optimized plan). Building the
+    frames is most of a sweep's cost; only the two results are kept, so
+    no more than one frame is alive at a time."""
+    import __spark_entry__ as E
+
+    checks = {}
+    for name, fn in E.queries().items():
+        qe = fn(spark, sf)._jdf.queryExecution()
+        checks[name] = ("BatchEvalPython" in qe.executedPlan().toString(),
+                        _unbounded_global_windows(qe.optimizedPlan()))
+    return checks
+
+
 def test_extraction_scan_prunes_columns(spark, tmp_path):
     """The pages scan must read exactly (url, warc_ts, html, lang) —
     never `text` (the 100 TB ground-truth column)."""
@@ -50,6 +117,23 @@ def test_extraction_path_has_no_shuffle(spark, tmp_path):
     path = str(tmp_path / "pages2")
     pages_dataframe(spark, 50).write.parquet(path)
     plan = _plan(extract_stage(spark.read.parquet(path)))
+    assert "Exchange" not in plan
+
+
+def test_registry_pipeline_is_one_python_map(spark, tmp_path):
+    """A registry plan with per-stage overrides compiles to the same
+    single fused stage: exactly one Python map node, zero Exchange."""
+    from mindocr_spark.corpus import pages_dataframe
+    from mindocr_spark.operators.registry import build_pipeline
+
+    path = str(tmp_path / "pages3")
+    pages_dataframe(spark, 50).write.parquet(path)
+    plan = _plan(build_pipeline(
+        ["parse", "score", {"detect": {"detector": "pse"}}, "assemble"]
+    )(spark.read.parquet(path)))
+    python_nodes = re.findall(
+        r"\(\d+\) (\w*(?:InPandas|InArrow|EvalPython)\w*)", plan)
+    assert python_nodes == ["MapInPandas"], plan
     assert "Exchange" not in plan
 
 
@@ -203,22 +287,15 @@ def test_direction_norm_stays_narrow(spark, tmp_path):
     )
 
 
-def test_no_per_row_python_across_entire_query_suite(spark):
+def test_no_per_row_python_across_entire_query_suite(query_plan_checks):
     """Sweeping guarantee over ALL driver-contract queries: no plan
     may contain a per-row Python eval node (BatchEvalPython). Arrow
     batch nodes (ArrowEvalPython / mapInPandas FlatMapsInPandas) are
     the sanctioned Python seams — extraction, NFC normalization,
     multimodal codecs — and stay allowed; row-at-a-time Python in any
     hot path is the one-way door this test keeps shut."""
-    import __spark_entry__ as E
-
-    sf_dir = "/root/testdata/sf0.001"
-    offenders = {}
-    for name, fn in E.queries().items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan(
-        ).toString()
-        if "BatchEvalPython" in plan:
-            offenders[name] = True
+    offenders = {name: True for name, (per_row, _) in
+                 query_plan_checks.items() if per_row}
     assert not offenders, f"per-row Python UDFs in: {sorted(offenders)}"
 
 
@@ -280,7 +357,8 @@ def test_ddsketch_bucket_assignment_has_no_join(spark):
     assert "BroadcastNestedLoopJoin" in plan  # tiny quantile spine
 
 
-def test_no_single_partition_window_over_unbounded_relation(spark):
+def test_no_single_partition_window_over_unbounded_relation(
+        query_plan_checks):
     """Sweeping guarantee over ALL driver-contract queries: no
     optimized plan may contain an UNPARTITIONED Window whose input is
     an unbounded relation — Spark executes those by moving every row
@@ -306,53 +384,8 @@ def test_no_single_partition_window_over_unbounded_relation(spark):
 
     Exact global ranks/prefix sums over unbounded relations must go
     through `mindocr_spark.functions.ranking.ranked_global`."""
-    import re as _re
-
-    import __spark_entry__ as E
-
-    BOUNDED_GROUPING = {"__rg_pid", "__ckpt_b"}
-
-    def walk(node):
-        yield node
-        ch = node.children()
-        for i in range(ch.size()):
-            yield from walk(ch.apply(i))
-
-    def bounded(node) -> bool:
-        name = node.getClass().getSimpleName()
-        if name in ("GlobalLimit", "LocalLimit", "LocalRelation",
-                    "OneRowRelation"):
-            return True
-        if name == "Generate":
-            return False
-        ch = node.children()
-        if name == "Aggregate":
-            ge = node.groupingExpressions()
-            if ge.size() == 0:
-                return True
-            names = set()
-            for j in range(ge.size()):
-                m = _re.match(
-                    r"^'?([A-Za-z_][A-Za-z0-9_]*)#\d+",
-                    ge.apply(j).toString())
-                names.add(m.group(1) if m else "?")
-            if names <= BOUNDED_GROUPING:
-                return True
-            return ch.size() > 0 and bounded(ch.apply(0))
-        if ch.size() == 0:
-            return False  # scans, LogicalRDD, streaming sources
-        return all(bounded(ch.apply(i)) for i in range(ch.size()))
-
-    sf_dir = "/root/testdata/sf0.001"
-    offenders = {}
-    for name, fn in E.queries().items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
-        for node in walk(plan):
-            if (node.getClass().getSimpleName() == "Window"
-                    and node.partitionSpec().size() == 0
-                    and not bounded(node.children().apply(0))):
-                offenders.setdefault(name, 0)
-                offenders[name] += 1
+    offenders = {name: windows for name, (_, windows) in
+                 query_plan_checks.items() if windows}
     assert not offenders, (
         f"single-partition Window over unbounded relation in: "
         f"{sorted(offenders)}")
