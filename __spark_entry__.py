@@ -8044,15 +8044,19 @@ def q_bucketed_join(spark, sf_dir):
     # silently WRONG join results, not a clean failure.
     tag = hashlib.md5(
         f"{sf_dir}:{os.getpid()}".encode()).hexdigest()[:10]
+    root = f"/tmp/mindocr_bucketed_{tag}"
     # pid-unique names accumulate across processes: sweep STALE
     # leftovers (mtime > 1 h, never this process's own tag) so
     # repeated bench/driver/pytest runs don't grow /tmp and the
-    # warehouse without bound. Best-effort — a live concurrent
-    # session's directory is younger than the threshold.
+    # warehouse without bound. Every call touches its own directory
+    # before sweeping, so a directory is an hour old only when no
+    # session has used it for an hour — never a live session's.
     import glob as _glob
     import shutil as _shutil
     import time as _time
 
+    os.makedirs(root, exist_ok=True)
+    os.utime(root)
     cutoff = _time.time() - 3600
     for d in _glob.glob("/tmp/mindocr_bucketed_*"):
         if d.endswith(tag):
@@ -8064,7 +8068,6 @@ def q_bucketed_join(spark, sf_dir):
             continue
     docs_tbl = f"mindocr_docs_bucketed_{tag}"
     emb_tbl = f"mindocr_emb_bucketed_{tag}"
-    root = f"/tmp/mindocr_bucketed_{tag}"
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
     write_bucketed(d, docs_tbl, "doc_id", 8, path=f"{root}/docs")

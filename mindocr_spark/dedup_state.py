@@ -49,7 +49,13 @@ from mindocr_spark.functions.dedup import (
     minhash_signatures_md5,
 )
 from mindocr_spark.functions.text import fingerprint_md5
-from mindocr_spark.operators.pipeline import _FS, _manifest_seq
+from mindocr_spark.operators.pipeline import (
+    _FS,
+    _commit,
+    _load_manifests,
+    _manifest_seq,
+    _pick_snapshot,
+)
 
 _COMPONENTS = ("corpus", "fingerprints", "signatures", "bands")
 
@@ -114,7 +120,10 @@ class DedupLog:
     tables, fixed the same way Iceberg/Delta fix it (rewrite + atomic
     pointer swing). Same single-writer contract and crash matrix as
     write_results_wap: an increment directory with no manifest is
-    invisible and swept by a later commit."""
+    invisible and swept by a later commit. Snapshot selection and
+    commit-and-expire are the WAP protocol's own helpers
+    (`operators.pipeline._pick_snapshot` and `_commit`), so both tables
+    share one retention policy."""
 
     def __init__(self, spark: SparkSession, root: str,
                  keep_manifests: int = 8):
@@ -148,8 +157,6 @@ class DedupLog:
         )
 
     def _manifests(self) -> list[dict]:
-        from mindocr_spark.operators.pipeline import _load_manifests
-
         names = self._list_manifest_names()
         if self._mcache is None or names != self._mnames:
             self._mcache = _load_manifests(self.fs, self.root)
@@ -197,22 +204,12 @@ class DedupLog:
         pruning and pushdown apply as usual. Passing `seq` time-travels
         to that snapshot's increment set; it must be inside the
         retained window (LookupError otherwise)."""
-        if seq is None:
-            runs = self.live_increments()
-        else:
-            by_seq = {m["seq"]: m for m in self._manifests()}
-            if seq not in by_seq:
-                raise LookupError(
-                    f"no retained snapshot seq={seq} under {self.root} "
-                    f"(retained: {sorted(by_seq)})"
-                )
-            runs = list(by_seq[seq]["increments"])
-        if not runs:
+        manifests = self._manifests()
+        if not manifests:
             return None
-        paths = [
-            f"{self.root}/_increments/{r}/{component}" for r in runs
-        ]
-        return self.spark.read.parquet(*paths)
+        runs = _pick_snapshot(manifests, seq, self.root)["increments"]
+        return self.spark.read.parquet(
+            *[f"{self.root}/_increments/{r}/{component}" for r in runs])
 
     # -- commit --
 
@@ -260,48 +257,25 @@ class DedupLog:
         counters: dict | None = None,
         cur: dict | None = None,
     ) -> None:
-        """Publish a new snapshot: one checksummed create-once manifest
-        (via the shared WAP-protocol writer) naming the live increment
-        set, then expire everything outside the retention window —
-        manifests older than the newest `keep_manifests`, and any
-        increment directory NO retained manifest references (orphans
-        from crashed runs, compaction-absorbed dirs whose naming
-        manifests have aged out). The commit point is the single file
-        create — a crash before it leaves the previous snapshot intact;
-        a crash after it leaves sweepable garbage the next commit
-        collects. `cur` is the caller's already-loaded current manifest
-        (every caller has one in hand; re-reading here would triple the
-        small-object reads per streaming micro-batch on an object
-        store). The retained window for the expiry sweep comes from
-        the instance cache plus the manifest just written — no
-        re-list/re-read of manifest bodies at commit time."""
-        from mindocr_spark.operators.pipeline import _write_manifest
-
+        """Publish a new snapshot naming the live increment set through
+        the shared `_commit`: one create-once manifest, then expiry of
+        every manifest and increment dir outside the newest
+        `keep_manifests`, swept from the instance cache with no manifest
+        body re-read. `cur` is the caller's already-loaded current
+        manifest."""
         prior_runs = (
             list(cur.get("all_runs", cur["increments"])) if cur else []
         )
-        prior_manifests = self._manifests()
         body = {
             "increments": list(increments),
             "all_runs": prior_runs + [run_id],
             "params": dict(params.__dict__),
             "counters": counters or {},
         }
-        seq = _write_manifest(self.fs, self.root, run_id, body)
-        self._mcache = (
-            prior_manifests + [{"seq": seq, "run_id": run_id, **body}]
-        )[-self.keep_manifests:]
-        retained = list(self._mcache)
-        referenced = {r for m in retained for r in m["increments"]}
-        for name in self.fs.list_names(f"{self.root}/_increments"):
-            if name not in referenced:
-                self.fs.delete(f"{self.root}/_increments/{name}")
-        live_seqs = {m["seq"] for m in retained}
-        mdir = f"{self.root}/_manifests"
-        for name in self.fs.list_names(mdir):
-            s = _manifest_seq(name)
-            if s is not None and s not in live_seqs:
-                self.fs.delete(f"{mdir}/{name}")
+        self._mcache = _commit(
+            self.fs, self.root, run_id, body, self._manifests(),
+            self.keep_manifests, "_increments", lambda m: m["increments"],
+        )
         # snapshot the post-sweep listing so the cache validates clean
         # on the next access instead of re-reading every body
         self._mnames = self._list_manifest_names()

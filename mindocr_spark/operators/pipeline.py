@@ -222,13 +222,6 @@ class _FS:
             return []
         return [s.getPath().getName() for s in self.fs.listStatus(p)]
 
-    def list_sizes(self, path: str) -> list[tuple[str, int]]:
-        p = self._Path(path)
-        if not self.fs.exists(p):
-            return []
-        return [(s.getPath().getName(), int(s.getLen()))
-                for s in self.fs.listStatus(p)]
-
     def list_sizes_recursive(self, path: str) -> list[tuple[str, int]]:
         """(path-relative-to-`path`, bytes) for every FILE under `path`,
         any depth — the inventory primitive a Hive-partitioned snapshot
@@ -355,10 +348,11 @@ def _write_manifest(fs: _FS, path: str, run_id: str, fields: dict) -> int:
     seq allocated as max over ALL manifest file names (valid or torn —
     so a torn file never collides with a retry's commit) + 1, body
     checksummed with a sorted-JSON md5, one create-once file named
-    ``manifest-<seq>-<run_id>.json``. Every manifest writer (the WAP
-    sink and the DedupLog) goes through here so the naming / seq /
-    checksum scheme can never drift between writers; `_load_manifests`
-    is the matching read side. Returns the allocated seq."""
+    ``manifest-<seq>-<run_id>.json``. Every commit (a WAP publish, a
+    compaction, a DedupLog increment or compaction) reaches it through
+    `_commit`, so the naming / seq / checksum scheme can never drift
+    between writers; `_load_manifests` is the matching read side.
+    Returns the allocated seq."""
     import hashlib
     import json
 
@@ -382,7 +376,9 @@ def _load_manifests(fs: _FS, path: str) -> list[dict]:
     creates) fails the parse or the checksum and is treated as
     never-committed. A READ error is not a verdict on the file: it
     propagates, so a transient I/O failure can never silently serve an
-    older snapshot."""
+    older snapshot. Every reader picks from this list through
+    `_pick_snapshot`, and every writer hands it to `_commit` as the
+    prior window — one load per publish, compaction or read."""
     import hashlib
     import json
 
@@ -405,6 +401,49 @@ def _load_manifests(fs: _FS, path: str) -> list[dict]:
         if digest == doc.get("md5"):
             out.append(doc)
     return sorted(out, key=lambda d: d["seq"])
+
+
+def _pick_snapshot(manifests: list[dict], seq: int | None,
+                   path: str) -> dict:
+    """The one snapshot-selection rule over `_load_manifests` output:
+    the newest manifest, or the one numbered `seq` (time travel). Raises
+    FileNotFoundError when nothing is committed and LookupError naming
+    the retained window when `seq` has expired or never existed."""
+    if not manifests:
+        raise FileNotFoundError(f"no committed WAP snapshot under {path}")
+    if seq is None:
+        return manifests[-1]
+    for m in manifests:
+        if m["seq"] == seq:
+            return m
+    raise LookupError(
+        f"no committed snapshot seq={seq} under {path} "
+        f"(retained: {[m['seq'] for m in manifests]})"
+    )
+
+
+def _commit(fs: _FS, path: str, run_id: str, fields: dict,
+            prior: list[dict], keep: int, data_subdir: str,
+            live_dirs_of) -> list[dict]:
+    """The one commit-and-expire path: write the manifest (the commit
+    point), then sweep once over the newest `keep` of `prior` (the
+    caller's loaded manifests) plus the new body, re-reading none.
+    Deleted: every dir under ``{path}/{data_subdir}`` that no retained
+    manifest names (``live_dirs_of``) and every manifest file outside
+    the window, torn ones included. Returns the retained manifests."""
+    seq = _write_manifest(fs, path, run_id, fields)
+    retained = (prior + [{"seq": seq, "run_id": run_id, **fields}])[-keep:]
+    live = {d for m in retained for d in live_dirs_of(m)}
+    for name in fs.list_names(f"{path}/{data_subdir}"):
+        if name not in live:
+            fs.delete(f"{path}/{data_subdir}/{name}")
+    live_seqs = {m["seq"] for m in retained}
+    mdir = f"{path}/{_MANIFEST_DIR}"
+    for name in fs.list_names(mdir):
+        s = _manifest_seq(name)
+        if s is not None and s not in live_seqs:
+            fs.delete(f"{mdir}/{name}")
+    return retained
 
 
 import re as _re
@@ -510,18 +549,7 @@ def read_published_pruned(spark: "SparkSession", path: str,
         raise ValueError(
             f"columns in both prune and ranges: {sorted(overlap)}")
     manifests = _load_manifests(_FS(spark, path), path)
-    if not manifests:
-        raise FileNotFoundError(f"no committed WAP snapshot under {path}")
-    if seq is None:
-        snap = manifests[-1]
-    else:
-        by_seq = {m["seq"]: m for m in manifests}
-        if seq not in by_seq:
-            raise LookupError(
-                f"no committed snapshot seq={seq} under {path} "
-                f"(retained: {sorted(by_seq)})"
-            )
-        snap = by_seq[seq]
+    snap = _pick_snapshot(manifests, seq, path)
     specs = [parse_partition_spec(s)
              for s in (snap.get("partition_by") or [])]
     by_col = {sp["col"]: sp for sp in specs}
@@ -750,15 +778,8 @@ def resolve_published(spark: "SparkSession", path: str,
     manifests = _load_manifests(_FS(spark, path), path)
     if not manifests:
         return None
-    if seq is not None:
-        for m in manifests:
-            if m["seq"] == seq:
-                return f"{path}/{_DATA_DIR}/{m['data_dir']}"
-        raise LookupError(
-            f"no committed snapshot seq={seq} under {path} "
-            f"(retained: {[m['seq'] for m in manifests]})"
-        )
-    return f"{path}/{_DATA_DIR}/{manifests[-1]['data_dir']}"
+    snap = _pick_snapshot(manifests, seq, path)
+    return f"{path}/{_DATA_DIR}/{snap['data_dir']}"
 
 
 def read_published(spark: "SparkSession", path: str,
@@ -771,25 +792,12 @@ def read_published(spark: "SparkSession", path: str,
     resolve to old physical names, added columns surface as typed
     NULLs on pre-evolution snapshots, dropped columns vanish.
     ``as_written=True`` bypasses the mapping (snapshot archaeology);
-    tables without recorded schemas read as-written always."""
-    manifests = _load_manifests(_FS(spark, path), path)
-    if not manifests:
-        raise FileNotFoundError(f"no committed WAP snapshot under {path}")
-    snap = manifests[-1]
-    if seq is not None:
-        by_seq = {m["seq"]: m for m in manifests}
-        if seq not in by_seq:
-            raise LookupError(
-                f"no committed snapshot seq={seq} under {path} "
-                f"(retained: {sorted(by_seq)})"
-            )
-        snap = by_seq[seq]
-    df = spark.read.parquet(f"{path}/{_DATA_DIR}/{snap['data_dir']}")
-    cur_fields = manifests[-1].get("schema")
-    snap_fields = snap.get("schema")
-    if as_written or not (cur_fields and snap_fields):
-        return df
-    return _project_to_schema(df, snap_fields, cur_fields)
+    tables without recorded schemas read as-written always. The mapped
+    read is `read_published_pruned` with no probes."""
+    if not as_written:
+        return read_published_pruned(spark, path, seq=seq)
+    snap = _pick_snapshot(_load_manifests(_FS(spark, path), path), seq, path)
+    return spark.read.parquet(f"{path}/{_DATA_DIR}/{snap['data_dir']}")
 
 
 def write_results_wap(
@@ -801,7 +809,6 @@ def write_results_wap(
     keep_snapshots: int = 2,
     partition_by: tuple[str, ...] = (),
     schema_fields: list[dict] | None = None,
-    collect_stats: bool = True,
 ) -> bool:
     """Write-audit-publish sink — the Iceberg WAP commit discipline
     (stage to a branch → validate → fast-forward main; SURVEY §1.4/§4)
@@ -920,7 +927,8 @@ def write_results_wap(
     if not _metrics_row_exists(spark, metrics_path, run_id):
         _append_metrics_row(spark, g, run_id, metrics_path)
 
-    _write_manifest(fs, path, run_id, {
+    # commit + GC (step 4) from the manifests loaded above
+    _commit(fs, path, run_id, {
         "data_dir": run_id,
         "partition_by": list(partition_by),
         "schema": schema_fields,
@@ -928,24 +936,8 @@ def write_results_wap(
                      for k, v in g.items()},
         # per-file min/max (Iceberg data-skipping stats): consulted by
         # read_published_pruned to drop whole files before the scan
-        "file_stats": (_collect_file_stats(spark, data_dir)
-                       if collect_stats else {}),
-    })
-    mdir = f"{path}/{_MANIFEST_DIR}"
-
-    # GC: drop data dirs not referenced by the newest keep_snapshots
-    # manifests (orphans from crashed/rejected runs included) and stale
-    # manifest files beyond the retained tail
-    manifests = _load_manifests(fs, path)
-    live = {m["data_dir"] for m in manifests[-keep_snapshots:]}
-    for name in fs.list_names(f"{path}/{_DATA_DIR}"):
-        if name not in live:
-            fs.delete(f"{path}/{_DATA_DIR}/{name}")
-    live_seqs = {m["seq"] for m in manifests[-keep_snapshots:]}
-    for name in fs.list_names(mdir):
-        s = _manifest_seq(name)
-        if s is not None and s not in live_seqs:
-            fs.delete(f"{mdir}/{name}")
+        "file_stats": _collect_file_stats(spark, data_dir),
+    }, committed, keep_snapshots, _DATA_DIR, lambda m: [m["data_dir"]])
     return True
 
 
@@ -994,9 +986,7 @@ def compact_published(
 
     fs = _FS(spark, path)
     manifests = _load_manifests(fs, path)
-    if not manifests:
-        raise FileNotFoundError(f"no committed WAP snapshot under {path}")
-    cur = manifests[-1]
+    cur = _pick_snapshot(manifests, None, path)
     if any(m["run_id"] == run_id for m in manifests):
         return True  # idempotent replay of a committed compaction
     partition_by = list(cur.get("partition_by") or [])
@@ -1054,15 +1044,6 @@ def compact_published(
     # rewritten files get fresh min/max ranges (carrying the old map
     # forward would reference deleted files and skip nothing)
     manifest_fields["file_stats"] = _collect_file_stats(spark, new_dir)
-    _write_manifest(fs, path, run_id, manifest_fields)
-    manifests = _load_manifests(fs, path)
-    live = {m["data_dir"] for m in manifests[-keep_snapshots:]}
-    for name in fs.list_names(f"{path}/{_DATA_DIR}"):
-        if name not in live:
-            fs.delete(f"{path}/{_DATA_DIR}/{name}")
-    live_seqs = {m["seq"] for m in manifests[-keep_snapshots:]}
-    for name in fs.list_names(f"{path}/{_MANIFEST_DIR}"):
-        s = _manifest_seq(name)
-        if s is not None and s not in live_seqs:
-            fs.delete(f"{path}/{_MANIFEST_DIR}/{name}")
+    _commit(fs, path, run_id, manifest_fields, manifests, keep_snapshots,
+            _DATA_DIR, lambda m: [m["data_dir"]])
     return True

@@ -348,12 +348,16 @@ def ingest_warc_incremental(
     ).load(warc_dir).select(
         "path", F.element_at(F.split("path", "/"), -1).alias("warc_file")
     )
-    try:
+    from mindocr_spark.operators.pipeline import _FS
+
+    # fail closed: only an ABSENT lineage means "nothing ingested yet";
+    # any other read error propagates rather than re-ingesting everything
+    if _FS(spark, lineage_path).exists(lineage_path):
         done = (
             spark.read.schema(WARC_LINEAGE_SCHEMA).parquet(lineage_path)
             .select("warc_file").distinct()
         )
-    except Exception:
+    else:
         done = spark.createDataFrame([], "warc_file string")
     pending = [
         (r["path"], r["warc_file"])

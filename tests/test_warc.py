@@ -396,3 +396,41 @@ class TestRevisitRecords:
         empty = self._pages(spark, [])
         assert write_warc_dir_deduped(
             empty, str(tmp_path / "w0"), n_files=2) == (0, 0)
+
+
+def test_incremental_ingest_fails_closed_on_lineage_read_error(
+        spark, tmp_path, monkeypatch):
+    """A lineage that exists but cannot be read is an error, not
+    "nothing ingested yet": the run raises instead of re-ingesting
+    every file."""
+    from pyspark.sql.readwriter import DataFrameReader
+    from mindocr_spark.sources.warc import (
+        format_response_record,
+        ingest_warc_incremental,
+        _warcinfo,
+    )
+
+    warc_dir = tmp_path / "in"
+    warc_dir.mkdir()
+    buf = bytearray(_warcinfo("a.warc"))
+    buf += format_response_record(
+        "https://inc.example/0", 1704067200,
+        b"<html><body>doc 0</body></html>", "en")
+    (warc_dir / "a.warc").write_bytes(bytes(buf))
+    pages_out = str(tmp_path / "pages")
+    lineage = str(tmp_path / "lineage")
+    assert ingest_warc_incremental(
+        spark, str(warc_dir), pages_out, lineage) == ["a.warc"]
+
+    real_parquet = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kw):
+        if lineage in paths:
+            raise OSError("simulated lineage read failure")
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    with pytest.raises(OSError, match="lineage read failure"):
+        ingest_warc_incremental(spark, str(warc_dir), pages_out, lineage)
+    monkeypatch.undo()
+    assert spark.read.parquet(pages_out).count() == 1
