@@ -53,6 +53,7 @@ from mindocr_spark.operators.pipeline import (
     _FS,
     _commit,
     _load_manifests,
+    _manifest_name,
     _manifest_seq,
     _pick_snapshot,
 )
@@ -261,8 +262,9 @@ class DedupLog:
         the shared `_commit`: one create-once manifest, then expiry of
         every manifest and increment dir outside the newest
         `keep_manifests`, swept from the instance cache with no manifest
-        body re-read. `cur` is the caller's already-loaded current
-        manifest."""
+        body re-read, and the cache's names taken from the commit
+        (three listings in all: the cache check and `_commit`'s two).
+        `cur` is the caller's already-loaded current manifest."""
         prior_runs = (
             list(cur.get("all_runs", cur["increments"])) if cur else []
         )
@@ -276,9 +278,11 @@ class DedupLog:
             self.fs, self.root, run_id, body, self._manifests(),
             self.keep_manifests, "_increments", lambda m: m["increments"],
         )
-        # snapshot the post-sweep listing so the cache validates clean
-        # on the next access instead of re-reading every body
-        self._mnames = self._list_manifest_names()
+        # the retained manifests are exactly the files the sweep left,
+        # so the cache validates clean on the next access without a
+        # listing or a body re-read here
+        self._mnames = [_manifest_name(m["seq"], m["run_id"])
+                        for m in self._mcache]
 
     def compact(self, target_partitions: int | None = None) -> bool:
         """Fold every live increment into ONE consolidated increment

@@ -17,6 +17,8 @@ point:
 
 from __future__ import annotations
 
+import re as _re
+
 from pyspark.sql import DataFrame, functions as F
 
 from mindocr_spark import extract_core as core
@@ -91,8 +93,9 @@ def write_results(
     - "global": metrics harvested via ``DataFrame.observe`` DURING the
       write job itself — zero extra passes (the observed plan executes
       exactly once, so the counters are exact); one row with
-      partition_id = -1. At 100 TB the free global row is the
-      every-run default and the per-partition audit is the
+      partition_id = -1, written as the run-keyed file the WAP sink
+      writes (`_append_metrics_row`). At 100 TB the free global row is
+      the every-run default and the per-partition audit is the
       deep-inspection mode.
     """
     if metrics_granularity not in ("partition", "global"):
@@ -158,46 +161,55 @@ def _harvest(obs) -> dict:
     return {k: (0 if v is None else v) for k, v in dict(obs.get).items()}
 
 
-def _metrics_row_exists(spark, metrics_path: str, run_id: str) -> bool:
-    """Whether the metrics sink already carries a row for run_id — one
-    bookkeeping-sized filtered scan (run_id pushdown applies), used to
-    make the WAP audit-record append idempotent under crash-retry."""
-    if not _FS(spark, metrics_path).exists(metrics_path):
-        return False
-    return (
-        spark.read.parquet(metrics_path)
-        .where(F.col("run_id") == run_id).limit(1).count() > 0
-    )
-
-
 def _append_metrics_row(spark, g: dict, run_id: str,
                         metrics_path: str) -> None:
-    spark.createDataFrame(
-        [(
-            -1, int(g["docs"]), int(g["bytes_in"]), int(g["chars_out"]),
-            float(g["boilerplate_ratio"]), int(g["failures"]),
-            int(g["blocks"]), run_id,
-        )],
-        "partition_id int, docs bigint, bytes_in bigint, chars_out bigint, "
-        "boilerplate_ratio double, failures bigint, blocks bigint, "
-        "run_id string",
-    ).write.mode("append").parquet(metrics_path)
+    """The one-row audit record of a run, written as the run-keyed file
+    ``{metrics_path}/part-run-{run_id}.parquet`` through `_FS`'s
+    create-once write: the row is built in memory with pyarrow, in the
+    column names and types Spark's own metrics writes use, so no Spark
+    job runs. A retry of the same run_id overwrites the same file, so
+    the table never holds two rows for one run."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    row = pa.table({
+        "partition_id": pa.array([-1], pa.int32()),
+        "docs": pa.array([int(g["docs"])], pa.int64()),
+        "bytes_in": pa.array([int(g["bytes_in"])], pa.int64()),
+        "chars_out": pa.array([int(g["chars_out"])], pa.int64()),
+        "boilerplate_ratio": pa.array([float(g["boilerplate_ratio"])],
+                                      pa.float64()),
+        "failures": pa.array([int(g["failures"])], pa.int64()),
+        "blocks": pa.array([int(g["blocks"])], pa.int64()),
+        "run_id": pa.array([run_id], pa.string()),
+    })
+    buf = pa.BufferOutputStream()
+    pq.write_table(row, buf)
+    _FS(spark, metrics_path).write_bytes(
+        f"{metrics_path.rstrip('/')}/part-run-{run_id}.parquet",
+        buf.getvalue().to_pybytes())
 
 
 class _FS:
     """Thin wrapper over the Hadoop FileSystem API resolved for a URI —
     the same abstraction spark itself uses for every path, so the WAP
     commit protocol below works verbatim on file://, hdfs:// and
-    s3a:// (any scheme the cluster's Hadoop conf knows). Only four
-    primitives, all object-store-native: create-once small-file write,
-    full small-file read, directory listing, recursive delete. NO
-    renames anywhere — commit atomicity comes from single-file
-    creation (an object-store PUT), not from rename."""
+    s3a:// (any scheme the cluster's Hadoop conf knows). Its primitives
+    are all object-store-native: create-once small-file write, ranged
+    read (a whole small file, or a byte range such as a Parquet
+    footer), directory listing (flat or recursive), existence check,
+    recursive delete. NO renames anywhere — commit atomicity comes from
+    single-file creation (an object-store PUT), not from rename."""
+
+    #: Bytes per py4j reply. py4j base64-encodes a byte[] reply, and one
+    #: past its 8 KiB writer buffer is split and stalls about 40 ms
+    #: (Nagle plus delayed ACK): on a 4-core host an 8 KB read took
+    #: 44 ms, a 6 KB one 1.3 ms. 4096 raw bytes encode to about 5.5 KB.
+    CHUNK = 4096
 
     def __init__(self, spark: "SparkSession", path: str):
         jvm = spark._jvm
         self._Path = jvm.org.apache.hadoop.fs.Path
-        self._io = jvm.org.apache.commons.io.IOUtils
         self.fs = self._Path(path).getFileSystem(
             spark._jsc.hadoopConfiguration()
         )
@@ -210,9 +222,27 @@ class _FS:
             out.close()
 
     def read_bytes(self, path: str) -> bytes:
+        return self.read_range(path, 0, None)
+
+    def read_range(self, path: str, offset: int,
+                   length: int | None) -> bytes:
+        """`length` bytes from `offset` (to the end of the file when
+        None), fetched in replies of at most `CHUNK` bytes."""
         stream = self.fs.open(self._Path(path))
         try:
-            return bytes(self._io.toByteArray(stream))
+            if offset:
+                stream.seek(offset)
+            parts = []
+            while length is None or length > 0:
+                want = self.CHUNK if length is None else min(self.CHUNK,
+                                                             length)
+                part = bytes(stream.readNBytes(want))
+                parts.append(part)
+                if len(part) < want:
+                    break
+                if length is not None:
+                    length -= want
+            return b"".join(parts)
         finally:
             stream.close()
 
@@ -269,41 +299,146 @@ def _manifest_seq(name: str) -> int | None:
 _STATS_TYPES = frozenset(
     {"string", "bigint", "int", "smallint", "tinyint", "boolean"})
 
+#: Footer key under which Spark records the schema it wrote.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
-def _collect_file_stats(spark: "SparkSession", data_dir: str) -> dict:
+#: Hive partition values spark.read.parquet infers as an integer (int
+#: or bigint while the value fits a long) ...
+_PART_INT_RE = _re.compile(r"[+-]?\d+")
+#: ... and a superset of those it infers as decimal, double, date or
+#: timestamp (Java number syntax, ISO dates): such a value costs its
+#: column the stats, never a wrong type. Anything else is a string.
+_PART_NOT_STRING_RE = _re.compile(
+    r"[+-]?(NaN|Infinity|(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?[fFdD]?|0[xX].*)"
+    r"|[+-]?\d{4,}-\d\d-\d\d([ T].*)?", _re.S)
+_JAVA_SPACE = "".join(map(chr, range(33)))  # what Java's trim() strips
+
+
+def _data_files(fs: _FS, data_dir: str) -> list[tuple[str, int]]:
+    """(relative path, bytes) of every data file of a snapshot, from one
+    recursive listing: the ``.parquet`` files spark.read.parquet would
+    scan (no segment hidden by a leading ``.`` or ``_``, partition dirs
+    excepted)."""
+    return [
+        (rel, size) for rel, size in fs.list_sizes_recursive(data_dir)
+        if rel.endswith(".parquet") and not any(
+            seg.startswith(".") or (seg.startswith("_") and "=" not in seg)
+            for seg in rel.split("/"))
+    ]
+
+
+def _read_footer(fs: _FS, path: str, size: int):
+    """The Parquet footer of one file as pyarrow FileMetaData, from two
+    ranged reads: the last 8 bytes (footer length and magic), then the
+    footer itself. No row data is read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tail = fs.read_range(path, size - 8, 8)
+    n = int.from_bytes(tail[:4], "little")
+    footer = fs.read_range(path, size - 8 - n, n)
+    return pq.read_metadata(pa.BufferReader(b"PAR1" + footer + tail))
+
+
+def _footer_stats(md) -> dict:
+    """{col: [min, max]} over all row groups of one footer, for each
+    top-level column whose Spark type (the schema Spark wrote into the
+    footer) is in `_STATS_TYPES`. [None, None] when every value is
+    NULL; the column is left out when a non-NULL row group carries no
+    min/max (parquet-mr drops them for values past about 4 KB)."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    spark_schema = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_schema is None:
+        return {}  # not written by Spark: types unknown, no stats
+    leaf: dict[str, int | None] = {}
+    for i in range(md.num_columns):
+        p = md.schema.column(i).path
+        leaf[p] = None if p in leaf else i  # an ambiguous path: no stats
+    out = {}
+    for f in StructType.fromJson(json.loads(spark_schema)).fields:
+        i = leaf.get(f.name)
+        if i is None or f.dataType.simpleString() not in _STATS_TYPES:
+            continue
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            col = md.row_group(g).column(i)
+            st = col.statistics
+            if st is None:
+                break
+            if st.has_null_count and st.null_count == col.num_values:
+                continue  # all-NULL row group
+            if not st.has_min_max:
+                break
+            lo = st.min if lo is None or st.min < lo else lo
+            hi = st.max if hi is None or st.max > hi else hi
+        else:
+            out[f.name] = [lo, hi]
+    return out
+
+
+def _partition_values(raws: list[str]) -> list | None:
+    """One Hive partition column's per-file values (unescaped path
+    values), typed the way spark.read.parquet infers the column: ints
+    when every non-NULL value is an integer that fits a long, the raw
+    strings when any value is a string (a mix widens to string), and
+    None (no stats) when Spark would read a decimal, double, date,
+    timestamp or an all-NULL column."""
+    vals = [None if r == "__HIVE_DEFAULT_PARTITION__" else r for r in raws]
+    kinds = set()
+    for v in vals:
+        if v is None:
+            continue
+        if _PART_INT_RE.fullmatch(v) and -(1 << 63) <= int(v) < (1 << 63):
+            kinds.add("int")
+        elif _PART_NOT_STRING_RE.fullmatch(v.strip(_JAVA_SPACE)):
+            kinds.add("other")
+        else:
+            kinds.add("string")
+    if kinds == {"int"}:
+        return [None if v is None else int(v) for v in vals]
+    return vals if "string" in kinds else None
+
+
+def _unescape_path(s: str) -> str:
+    """Spark's unescapePathName: every %XX in a partition dir name."""
+    return _re.sub(r"%([0-9A-Fa-f]{2})",
+                   lambda m: chr(int(m.group(1), 16)), s)
+
+
+def _collect_file_stats(fs: _FS, data_dir: str) -> dict:
     """Per-data-file min/max column statistics for the committed
     snapshot — the Iceberg manifest data-skipping payload, recorded at
     commit time: {relative_file: {col: [min, max]}} for every
     stats-eligible column (`_STATS_TYPES`). Files where a column is
     all-NULL record [None, None] (an equality probe can then skip the
-    file outright — the probe value is never NULL).
+    file outright — the probe value is never NULL). A column whose
+    footer holds no min/max is left out, and `_stats_keep_file` keeps
+    the file for it. Hive partition columns take their one value per
+    file from the path.
 
-    Cost: one extra scan of the snapshot per publish, aggregated per
-    input file (map-side combinable — one row per (file) survives).
-    Iceberg reads the same numbers out of the parquet footers for
-    free; the pointer-manifest emulation pays the scan instead of a
-    footer parser. The manifest grows by O(files x stat columns) —
-    the same cardinality Iceberg's own manifests carry."""
-    df = spark.read.parquet(data_dir)
-    cols = [f.name for f in df.schema.fields
-            if f.dataType.simpleString() in _STATS_TYPES]
-    if not cols:
-        return {}
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"__lo_{c}"))
-        aggs.append(F.max(c).alias(f"__hi_{c}"))
-    rows = df.groupBy(
-        F.input_file_name().alias("__file")).agg(*aggs).collect()
-    prefix = data_dir.rstrip("/") + "/"
-    out: dict = {}
-    for r in rows:
-        f_uri = r["__file"]
-        # input_file_name yields a URI (file:///...); key by the path
-        # RELATIVE to the data dir so manifests survive a table move
-        idx = f_uri.find(prefix.lstrip("/"))
-        rel = f_uri[idx + len(prefix.lstrip("/")):] if idx >= 0 else f_uri
-        out[rel] = {c: [r[f"__lo_{c}"], r[f"__hi_{c}"]] for c in cols}
+    Cost: O(files) footer reads in the calling process, no row data and
+    no Spark job — one recursive listing, then two ranged `_FS` reads
+    per file (the numbers Iceberg reads from the same footers). Keys are
+    paths RELATIVE to the data dir, so manifests survive a table move.
+    The manifest grows by O(files x stat columns) — the same cardinality
+    Iceberg's own manifests carry."""
+    out = {rel: _footer_stats(_read_footer(fs, f"{data_dir}/{rel}", size))
+           for rel, size in _data_files(fs, data_dir)}
+    parts: dict[str, dict[str, str]] = {}
+    for rel in out:
+        for seg in rel.split("/")[:-1]:
+            name, eq, raw = seg.partition("=")
+            if eq:
+                parts.setdefault(_unescape_path(name), {})[rel] = \
+                    _unescape_path(raw)
+    for name, raws in parts.items():
+        typed = _partition_values(list(raws.values()))
+        if typed is not None:
+            for rel, v in zip(raws, typed):
+                out[rel][name] = [v, v]
     return out
 
 
@@ -343,30 +478,35 @@ def _stats_keep_file(cols_stats: dict, probes: dict,
     return True
 
 
-def _write_manifest(fs: _FS, path: str, run_id: str, fields: dict) -> int:
+def _manifest_name(seq: int, run_id: str) -> str:
+    return f"manifest-{seq:010d}-{run_id}.json"
+
+
+def _write_manifest(fs: _FS, path: str, run_id: str, fields: dict,
+                    names: list[str]) -> dict:
     """The single WRITE-side implementation of the manifest protocol:
-    seq allocated as max over ALL manifest file names (valid or torn —
-    so a torn file never collides with a retry's commit) + 1, body
-    checksummed with a sorted-JSON md5, one create-once file named
+    seq allocated as max over ALL manifest file `names` (the caller's
+    listing of ``_manifests``; valid or torn — so a torn file never
+    collides with a retry's commit) + 1, body checksummed with a
+    sorted-JSON md5, one create-once file named
     ``manifest-<seq>-<run_id>.json``. Every commit (a WAP publish, a
     compaction, a DedupLog increment or compaction) reaches it through
     `_commit`, so the naming / seq / checksum scheme can never drift
     between writers; `_load_manifests` is the matching read side.
-    Returns the allocated seq."""
+    Returns the body written, md5 included — the same dict
+    `_load_manifests` would return for it."""
     import hashlib
     import json
 
-    mdir = f"{path}/{_MANIFEST_DIR}"
-    seqs = [s for s in map(_manifest_seq, fs.list_names(mdir))
-            if s is not None]
-    seq = (max(seqs) + 1) if seqs else 1
+    seq = max((s for s in map(_manifest_seq, names) if s is not None),
+              default=0) + 1
     body = {"seq": seq, "run_id": run_id, **fields}
     body["md5"] = hashlib.md5(
         json.dumps(body, sort_keys=True).encode()
     ).hexdigest()
-    fs.write_bytes(f"{mdir}/manifest-{seq:010d}-{run_id}.json",
+    fs.write_bytes(f"{path}/{_MANIFEST_DIR}/{_manifest_name(seq, run_id)}",
                    json.dumps(body).encode())
-    return seq
+    return body
 
 
 def _load_manifests(fs: _FS, path: str) -> list[dict]:
@@ -425,28 +565,29 @@ def _pick_snapshot(manifests: list[dict], seq: int | None,
 def _commit(fs: _FS, path: str, run_id: str, fields: dict,
             prior: list[dict], keep: int, data_subdir: str,
             live_dirs_of) -> list[dict]:
-    """The one commit-and-expire path: write the manifest (the commit
-    point), then sweep once over the newest `keep` of `prior` (the
-    caller's loaded manifests) plus the new body, re-reading none.
-    Deleted: every dir under ``{path}/{data_subdir}`` that no retained
-    manifest names (``live_dirs_of``) and every manifest file outside
-    the window, torn ones included. Returns the retained manifests."""
-    seq = _write_manifest(fs, path, run_id, fields)
-    retained = (prior + [{"seq": seq, "run_id": run_id, **fields}])[-keep:]
+    """The one commit-and-expire path: list ``_manifests`` once, write
+    the manifest (the commit point) at the seq that listing allocates,
+    then sweep once over the newest `keep` of `prior` (the caller's
+    loaded manifests) plus the new body, re-reading none. Deleted:
+    every dir under ``{path}/{data_subdir}`` that no retained manifest
+    names (``live_dirs_of``) and every listed manifest file outside the
+    window, torn ones included. Two listings per commit, one per
+    directory. Returns the retained manifests."""
+    mdir = f"{path}/{_MANIFEST_DIR}"
+    names = fs.list_names(mdir)
+    retained = (prior + [_write_manifest(fs, path, run_id, fields,
+                                         names)])[-keep:]
     live = {d for m in retained for d in live_dirs_of(m)}
     for name in fs.list_names(f"{path}/{data_subdir}"):
         if name not in live:
             fs.delete(f"{path}/{data_subdir}/{name}")
     live_seqs = {m["seq"] for m in retained}
-    mdir = f"{path}/{_MANIFEST_DIR}"
-    for name in fs.list_names(mdir):
+    for name in names:
         s = _manifest_seq(name)
         if s is not None and s not in live_seqs:
             fs.delete(f"{mdir}/{name}")
     return retained
 
-
-import re as _re
 
 #: Hidden-partitioning spec grammar (the Iceberg transform family):
 #: "col" (identity), "bucket(N, col)", "truncate(W, col)",
@@ -825,13 +966,19 @@ def write_results_wap(
        audit writes NO manifest — readers keep resolving the previous
        snapshot, and the staged directory is left for inspection (it is
        garbage-collected by the next successful publish);
-    3. COMMIT: append the metrics row (audit record first — a crash
-       after this point can at worst leave a metrics row for an
-       uncommitted run, never committed data with no audit trail), then
-       create ``{path}/_manifests/manifest-<seq>-<run_id>.json`` with an
+    3. COMMIT: write the audit record, one row built in memory, as the
+       run-keyed file ``{metrics_path}/part-run-{run_id}.parquet``
+       (audit record first — a crash after this point can at worst
+       leave a metrics row for an uncommitted run, never committed data
+       with no audit trail; a retry overwrites the same file, so a
+       run_id never gets two rows). Then read the per-file min/max
+       stats from the new files' Parquet footers and create
+       ``{path}/_manifests/manifest-<seq>-<run_id>.json`` with an
        embedded md5 self-checksum. Readers (:func:`resolve_published`)
        take the highest-seq manifest whose checksum verifies, so a torn
-       manifest write is simply not a commit;
+       manifest write is simply not a commit. The data write is the
+       only Spark job of a publish; every other step is metadata work
+       in the calling process;
     4. GC: data directories not referenced by the newest
        ``keep_snapshots`` manifests are deleted (the retained tail keeps
        in-flight readers of the previous snapshot alive), as are stale
@@ -849,9 +996,14 @@ def write_results_wap(
     which the retry overwrites and commits under a fresh seq.
 
     Crash matrix: during stage → orphan data dir, no manifest, readers
-    untouched, swept later; during manifest create → checksum fails,
-    treated as never-committed, seq burned; after manifest create →
-    committed. No intermediate state is ever visible to a reader.
+    untouched, swept later; during the audit-file write → uncommitted
+    run whose torn ``part-run-{run_id}.parquet`` makes a metrics read
+    fail loudly (it never miscounts), and the retry replaces the file;
+    between the audit file and the manifest → one metrics row for an
+    uncommitted run, which the retry overwrites; during manifest create
+    → checksum fails, treated as never-committed, seq burned; after
+    manifest create → committed. No intermediate state is ever visible
+    to a reader.
 
     Returns True iff published.
     """
@@ -920,12 +1072,11 @@ def write_results_wap(
     if not audit(g):
         return False  # no manifest written; previous snapshot still live
 
-    # audit record BEFORE the commit point, idempotent per run_id: the
-    # retry of a crash that landed between this append and the manifest
-    # create must not leave a duplicate metrics row (consumers count /
-    # join metrics by run_id)
-    if not _metrics_row_exists(spark, metrics_path, run_id):
-        _append_metrics_row(spark, g, run_id, metrics_path)
+    # audit record BEFORE the commit point, one run-keyed file: the
+    # retry of a crash that landed between this write and the manifest
+    # create overwrites it, so there is never a duplicate metrics row
+    # (consumers count / join metrics by run_id)
+    _append_metrics_row(spark, g, run_id, metrics_path)
 
     # commit + GC (step 4) from the manifests loaded above
     _commit(fs, path, run_id, {
@@ -936,7 +1087,7 @@ def write_results_wap(
                      for k, v in g.items()},
         # per-file min/max (Iceberg data-skipping stats): consulted by
         # read_published_pruned to drop whole files before the scan
-        "file_stats": _collect_file_stats(spark, data_dir),
+        "file_stats": _collect_file_stats(fs, data_dir),
     }, committed, keep_snapshots, _DATA_DIR, lambda m: [m["data_dir"]])
     return True
 
@@ -992,11 +1143,8 @@ def compact_published(
     partition_by = list(cur.get("partition_by") or [])
     data = f"{path}/{_DATA_DIR}/{cur['data_dir']}"
     # recursive inventory keyed by Hive partition dir ("" = table root)
-    inv = [
-        (_os.path.dirname(rel), rel, sz)
-        for rel, sz in fs.list_sizes_recursive(data)
-        if rel.endswith(".parquet")
-    ]
+    inv = [(_os.path.dirname(rel), rel, sz)
+           for rel, sz in _data_files(fs, data)]
     if not inv:
         raise FileNotFoundError(f"snapshot {cur['seq']} has no data files")
     files_df = spark.createDataFrame(
@@ -1043,7 +1191,7 @@ def compact_published(
     # data-skipping stats follow the DATA, not the manifest: the
     # rewritten files get fresh min/max ranges (carrying the old map
     # forward would reference deleted files and skip nothing)
-    manifest_fields["file_stats"] = _collect_file_stats(spark, new_dir)
+    manifest_fields["file_stats"] = _collect_file_stats(fs, new_dir)
     _commit(fs, path, run_id, manifest_fields, manifests, keep_snapshots,
             _DATA_DIR, lambda m: [m["data_dir"]])
     return True

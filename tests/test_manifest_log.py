@@ -28,6 +28,7 @@ class MemFS:
     def __init__(self):
         self.files: dict[str, bytes] = {}
         self.reads = 0
+        self.listed: list[str] = []
 
     def write_bytes(self, path, data):
         self.files[path] = data
@@ -37,6 +38,7 @@ class MemFS:
         return self.files[path]
 
     def list_names(self, path):
+        self.listed.append(path)
         pre = path + "/"
         return sorted({p[len(pre):].split("/", 1)[0] for p in self.files
                        if p.startswith(pre)})
@@ -107,6 +109,50 @@ def test_commit_sweeps_dedup_log_shape():
     assert [m["run_id"] for m in retained] == ["c", "d"]
     assert fs.list_names(f"t/{inc}") == ["c", "d"]
     assert [m["seq"] for m in _load_manifests(fs, "t")] == [3, 4]
+
+
+def test_commit_lists_each_directory_once():
+    """`_commit` lists ``_manifests`` once — the same names allocate the
+    seq and drive the sweep — and the data subdir once."""
+    fs = MemFS()
+    for r in ("r1", "r2", "r3"):
+        fs.mkdir(f"t/{_DATA_DIR}/{r}")
+        prior = _load_manifests(fs, "t")
+        fs.listed.clear()
+        retained = _commit(fs, "t", r, {"data_dir": r}, prior, 2,
+                           _DATA_DIR, _data_dir_of)
+        assert sorted(fs.listed) == ["t/_data", "t/_manifests"]
+    assert [m["run_id"] for m in retained] == ["r2", "r3"]
+    assert fs.list_names(f"t/{_DATA_DIR}") == ["r2", "r3"]
+
+
+def test_dedup_log_commit_caches_what_it_wrote():
+    """A DedupLog commit lists ``_manifests`` for its cache check and
+    once in `_commit`, never again to refresh the cache; the cached
+    snapshots are the same dicts, md5 included, that a reload returns,
+    and the next access validates the cache without reading a body."""
+    from mindocr_spark.dedup_state import DedupLog, MinHashParams
+
+    fs = MemFS()
+    log = object.__new__(DedupLog)  # the manifest plumbing, no JVM
+    log.spark, log.root, log.fs, log.keep_manifests = None, "t", fs, 2
+    log.refresh()
+    for run_id in ("a", "b", "c"):
+        cur = log.current()  # as commit_increment loads it
+        fs.mkdir(f"t/_increments/{run_id}")
+        fs.listed.clear()
+        log._commit_manifest(
+            run_id, (cur["increments"] if cur else []) + [run_id],
+            MinHashParams(), cur=cur)
+        assert sorted(fs.listed) == [
+            "t/_increments", "t/_manifests", "t/_manifests"]
+        reads = fs.reads
+        log.current()
+        assert fs.reads == reads, "the cache was re-read after a commit"
+    assert [m["run_id"] for m in log.snapshots()] == ["b", "c"]
+    loaded = _load_manifests(fs, "t")
+    assert sorted(log.snapshots()[-1]) == sorted(loaded[-1])
+    assert log.snapshots() == loaded
 
 
 def test_pick_snapshot():

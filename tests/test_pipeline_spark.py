@@ -405,7 +405,7 @@ def test_load_manifests_fails_closed():
                           if p.rsplit("/", 1)[0] == path)
 
     fs = MemFS()
-    assert _write_manifest(fs, "t", "r1", {"data_dir": "r1"}) == 1
+    assert _write_manifest(fs, "t", "r1", {"data_dir": "r1"}, [])["seq"] == 1
     mdir = "t/_manifests"
     torn = json.dumps({"seq": 2, "run_id": "r2", "data_dir": "r2"})[:25]
     fs.write_bytes(f"{mdir}/manifest-0000000002-r2.json", torn.encode())
