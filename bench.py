@@ -5,7 +5,13 @@ Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 JSON line::
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "docs_per_sec": ..., "cpus": ...}
+     "queries": {...}, "raw_value": ..., "raw_queries": {...},
+     "host": {"nproc": ..., "mem_total_mb": ...},
+     "sf": ..., "docs_per_sec": ..., "cpus": ...}
+
+``value``/``queries`` are after the outlier re-timing pass;
+``raw_value``/``raw_queries`` are the same timings before it. The
+headline suite is every registered query except ``HEADLINE_EXCLUDED``.
 
 The flagship measurement is extraction throughput (docs/sec) over a
 deterministic synthetic Common-Crawl-style corpus (the north-rule
@@ -32,6 +38,32 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 CORPUS_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "48000"))
 
 
+#: Registry queries left out of the timed headline suite: every other
+#: registered query is timed, in registry (definition) order. Keeping
+#: this set fixed keeps the suite total comparable across rounds.
+HEADLINE_EXCLUDED = (
+    "extract_spans", "extract_boilerplate", "jsonl_extract", "extract_east",
+    "extract_metrics_by_lang", "fanout_regroup", "reading_order",
+    "broadcast_dict_join", "union_sources", "except_keys",
+    "interval_overlap", "json_extract", "windowed_counts",
+    "skew_salted_agg", "token_stats", "quality_scores", "lang_id",
+    "rec_metrics_pairs", "rolling_fingerprint", "exact_dedup",
+    "minhash_lsh_md5", "simhash_md5", "direction_norm", "feed_parse",
+    "ann_lsh_topk", "ann_ivf_topk", "embedding_neardup",
+    "deterministic_sample", "sitemap_parse", "anchor_text", "page_metadata",
+    "redirect_resolve", "substring_dedup", "dup_survivor", "cdx_index",
+    "crawl_delta", "lang_pivot", "char_dict_encode", "argmax_cls",
+    "ctc_collapse", "attn_tokens", "approx_distinct",
+    "layout_reading_order", "multimodal_features", "multimodal_real_codec",
+)
+
+
+def headline_queries(entry_module) -> list[str]:
+    """The timed suite: the query registry minus HEADLINE_EXCLUDED."""
+    return [name for name in entry_module.oracle_sql()
+            if name not in HEADLINE_EXCLUDED]
+
+
 def _force(df) -> int:
     """Execute the full plan without materializing to the driver."""
     df.write.format("noop").mode("overwrite").save()
@@ -42,7 +74,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from mindocr_spark.session import get_spark
+    from mindocr_spark.session import get_spark, host_memory_mb
     from mindocr_spark.corpus import pages_dataframe
     from mindocr_spark.operators.pipeline import run_extraction
 
@@ -75,245 +107,7 @@ def main() -> None:
     corpus.unpersist()
 
     # -- headline operator queries over the sf tables ---------------------
-    headline = [
-        "extract_fulltext",     # pages-from-documents end-to-end extraction
-        "agg_partial_final",    # scan-heavy partial+final aggregation
-        "multi_join_revenue",   # multi-way join
-        "topk_per_group",       # window top-k
-        "sessionize",           # stateful window
-        "minhash_lsh",          # dedup scale path
-        "ngram_jaccard",        # dedup exact verify path
-        "ann_cosine_topk",      # similarity search
-        "simhash_neardup",      # simhash + banded hamming
-        "layout_assemble",      # 2-D layout block path
-        "layout_from_bytes",    # real PDF bytes → blocks → assembly
-        "warc_extract",         # WARC ingestion → full extraction
-        "curate_pipeline",      # end-to-end curation composite
-        # round-3 additions (appended so r02 diffs stay query-for-query)
-        "incremental_dedup",    # cross-corpus dedup vs committed state
-        "quality_repetition",   # Gopher/C4 repetition signals
-        "multimodal_video",     # real AVI decode + frame fan-out
-        # round-3 late additions (appended for the same reason)
-        "paragraph_dedup",      # CCNet/C4 corpus-level paragraph dedup
-        "pii_redact",           # PII scrubbing (codegen regex path)
-        "dup_components",       # transitive dup clusters (iterative CC)
-        "nfc_normalize",        # Unicode canonicalization (Arrow UDF)
-        "url_canonicalize",     # URL normal form + URL-level dedup
-        "domain_stats",         # per-registered-domain aggregation
-        "domain_cap",           # salted two-phase per-domain top-N
-        "blocklist_filter",     # broadcast anti-join domain blocklist
-        "decontaminate",        # eval-set 13-gram contamination check
-        "stratified_sample",    # deterministic per-language rebalance
-        "token_budget_sample",  # distributed prefix-sum budget mixing
-        "bm25_topk",            # inverted-index BM25 retrieval
-        "sequence_pack",        # concat-and-chunk packing bookkeeping
-        "lm_logppl",            # CCNet-style unigram LM perplexity gate
-        "lm_bigram_logppl",     # interpolated bigram LM scorer
-        "link_graph",           # href extraction + per-domain in-links
-        "domain_pagerank",      # 3-iteration domain PageRank
-        "semdedup",             # embedding-cluster semantic dedup
-        "quality_classifier",   # hashed-linear model scoring
-        "tfidf_keywords",       # full-vocabulary keyword tagging
-        "blockword_filter",     # C4 badwords codegen gate
-        "robots_flags",         # meta-robots politeness flags
-        "bpe_token_stats",      # BPE-ish token estimator
-        # round-3 final batch (appended for the same reason)
-        "robots_gate",          # robots.txt longest-match fetch gate
-        "fetch_schedule",       # politeness-aware per-host crawl round
-        "sitemap_coverage",     # declared-vs-crawled reconciliation
-        "revisit_policy",       # delta-driven recrawl buckets
-        "http_gate",            # WARC status/mime ingest gate
-        "wet_export",           # extraction → WET files → re-ingest
-        "wat_export",           # JVM-side metadata → WAT files → re-ingest
-        "mojibake_repair",      # guarded encoding repair (codegen)
-        "jsonld_extract",       # schema.org structured data
-        "table_extract",        # HTML tables → cell relation
-        "cdc_chunks",           # content-defined chunking (rolling hash)
-        "phrase_search",        # positional-postings phrase retrieval
-        "lexical_diversity",    # type-token ratio gate features
-        "link_density",         # page-level link-density spam signal
-        # round-3 session-B additions (appended for the same reason)
-        "code_math_detect",     # code/LaTeX content-type routing gate
-        "token_entropy",        # unigram-distribution entropy gate
-        "feed_discovery",       # RSS/Atom parse + frontier anti-join
-        "shingle_hotlist",      # corpus-wide heavy-hitter phrases
-        "outline_extract",      # h1-h6 section hierarchy (one window)
-        "soft404_detect",       # soft-404 two-signal crawl hygiene
-        "shard_export",         # JSONL shards -> re-ingest round trip
-        "sentence_split",       # sentence grain with source offsets
-        "ppl_buckets",          # CCNet head/middle/tail tiering
-        "corpus_rollup",        # dataset-card multi-grain ROLLUP
-        "asof_attribution",     # as-of join (union-and-carry plan)
-        "snapshot_upsert",      # MERGE: keys-only anti-join + union
-        "length_histogram",     # log2 token-length distribution
-        "publication_date",     # trafilatura-style date heuristic
-        # round-3 session-C additions (appended for the same reason)
-        "containment",          # directional excerpt/superset dedup
-        "boilerplate_purge",    # global line-frequency purge
-        "context_windows",      # stride windows for training prep
-        "script_mix",           # Unicode script-composition signal
-        "dehyphenate",          # PDF line-wrap repair
-        "grouped_split",        # leakage-safe domain-grouped split
-        "oov_rate",             # tokenizer-coverage audit
-        # round-3 session-D additions (appended for the same reason)
-        "readability",          # Flesch/FK pedagogy-tier gate
-        "temperature_mix",      # alpha=0.5 multilingual allocation
-        "global_shuffle",       # epoch-seeded training-order shuffle
-        "ngram_novelty",        # first-occurrence shingle novelty
-        "dsir_weights",         # DSIR hashed-bigram importance
-        "hits_scores",          # HITS hubs/authorities (3 iters)
-        "concordance",          # KWIC phrase-in-context
-        "length_quantiles",     # exact per-language p50/p90/p99
-        "zipf_fit",             # corpus-health Zipf slope
-        "bpe_merge_pairs",      # BPE merge induction step
-        "pmi_collocations",     # PMI phrase discovery
-        "bitext_mine",          # mutual-NN margin alignment
-        "quantile_gate",        # dynamic top-X%% score cutoff
-        # round-3 session-E additions (appended for the same reason)
-        "lang_verify",          # stopword-profile declared-lang audit
-        "within_doc_dedup",     # page-local repeated-line removal
-        "span_dedup",           # C4 three-sentence-span rule
-        "unigram_drift",        # snapshot KL divergence monitor
-        "gate_attribution",     # first-failing-gate funnel forensics
-        "lm_kn_logppl",         # Kneser-Ney bigram LM gate
-        "template_cluster",     # page-structure signature clustering
-        "heaps_fit",            # vocabulary-growth corpus health
-        "reciprocal_links",     # link-exchange (nepotism) signal
-        "url_templates",        # crawl-trap path-template mining
-        "token_fertility",      # per-lang tokenizer pricing audit
-        "selection_bias",       # gate-funnel distribution-shift audit
-        # round-3 session-F additions (appended for the same reason)
-        "image_phash_pairs",    # perceptual-hash image near-dup (real BMP)
-        "audio_fp_pairs",       # loudness-envelope audio near-dup (real WAV)
-        "media_dup_clusters",   # phash pairs -> components -> survivors
-        "trustrank",            # seeded trust propagation (3 iters)
-        "spam_mass",            # PageRank vs TrustRank spam quotient
-        "weighted_sample",      # A-ES weight-proportional draw (top-k)
-        "lm_backoff_logscore",  # trigram stupid-backoff fluency gate
-        # round-3 session-G additions
-        "cluster_mix",          # k-means topic-rebalanced epoch budget
-        # round-3 session-H additions (appended for the same reason)
-        "kcore",                # k-core link-farm peeling (4 rounds)
-        "bloom_gate",           # Bloom seen-set frontier gate
-        "license_detect",       # rights-aware license gate
-        "extract_markdown",     # layout -> markdown corpus export
-        "sitemap_discovery",    # robots.txt Sitemap: declarations
-        # round-3 session-I additions (appended for the same reason)
-        "gopher_gate",          # full Gopher rule filter (A1.1)
-        "nb_classifier",        # in-corpus trained NB classifier
-        "crawl_depth",          # BFS hop distance from seed domains
-        "bpe_vocab",            # 6-round Sennrich BPE induction
-        "multimodal_png",       # real DEFLATE PNG decode (CRC + filters)
-        "tfidf_cosine",         # sparse weighted-cosine neighbour join
-        "bpe_apply",            # learned-merge tokenizer replay pricing
-        "robots_wildcards",     # RFC 9309 */$ pattern fetch gate
-        "lsh_quality",          # MinHash banding recall S-curve audit
-        "leakage_audit",        # cross-split near-dup contamination
-        "sitemap_index",        # sitemapindex nesting resolution
-        # round-3 session-J additions (appended for the same reason)
-        "hreflang_clusters",    # language-edition set validation
-        "editdist_verify",      # exact verify stage for blocked pairs
-        "domain_prior_gate",    # two-level guilt-by-association gate
-        "para_lang_segments",   # CCNet paragraph-grain script ID
-        "meta_divergence",      # cloaking / SEO-stuffing signal
-        "luhn_cc_detect",       # mod-10-validated CC PII detection
-        "funnel_stages",        # strict-order sequence analytics
-        "homoglyph_spoof",      # confusable-script token spoofing
-        "dup_alignment",        # explainable dup run evidence
-        # round-3 session-K additions (appended for the same reason)
-        "triangle_count",       # triad-density (clustering) spam signal
-        "cooccur_itemsets",     # A-priori basket co-occurrence + lift
-        "mirror_detect",        # host-level mirror (dup-density) rollup
-        "bot_detect",           # request-cadence bot scrubbing
-        "stem_collapse",        # S-stemmer vocabulary-collapse audit
-        "mad_outliers",         # median/MAD robust value fence
-        "rank_stability",       # RBO top-k corpus-stability audit
-        "retrieval_eval",       # P@k/recall/MRR/nDCG IR eval harness
-        "scd2_history",         # SCD-2 capture-history compaction
-        "degree_assortativity", # Newman graph-health coefficient
-        "event_transitions",    # first-order Markov behavior matrix
-        "crawl_budget",         # max-min fair water-filling allocator
-        "skew_audit",           # shuffle-key hotspot / Gini diagnostics
-        "fk_integrity",         # referential-integrity warehouse audit
-        "retention_cohorts",    # first-seen cohort retention matrix
-        "traffic_anomaly",      # median/MAD day-grain flash-crowd fence
-        "zorder_audit",         # Morton-curve file-skipping layout audit
-        "hrw_sharding",         # rendezvous-hash resize-stability audit
-        "vsm_topk",             # tf-idf cosine retrieval arm
-        "rrf_fusion",           # reciprocal-rank hybrid fusion
-        "forget_propagation",   # RTBF dedup-cluster re-election audit
-        "label_propagation",    # deterministic LPA community sketch
-        "community_modularity", # Newman Q acceptance check on LPA
-        "kmv_distinct",         # mergeable oracle-exact distinct sketch
-        "gate_agreement",       # Cohen-kappa gate-redundancy audit
-        "calibration_ece",      # reliability-diagram ECE audit
-        "profile_drift",        # snapshot column-profile drift gate
-        "vocab_richness",       # Chao1 + Good-Turing crawl-planning
-        "k_anonymity",          # k-anon / l-diversity release audit
-        "compaction_plan",      # next-fit-decreasing binPack planner
-        "winnow_fingerprints",  # MOSS guaranteed-coverage fingerprints
-        "cms_counts",           # count-min sketch + one-sided error
-        "mix_entropy",          # training-mix entropy/evenness audit
-        "symspell_correct",     # deletion-key OCR-noise correction
-        "bleu_eval",            # corpus BLEU extraction-quality score
-        "ab_test",              # two-proportion z-test experiment readout
-        # round-3 session-N additions (appended for the same reason)
-        "ks_drift",             # KS two-sample snapshot drift test
-        "rank_sum",             # Mann-Whitney location drift test
-        "trend_test",           # Mann-Kendall + Sen slope trend
-        "benford_audit",        # first-digit fabricated-numbers screen
-        "roc_auc",              # scorer separability (tie-correct U)
-        "kendall_tau",          # cell-grid tau-b association
-        "spearman_rho",         # rank-correlation association
-        "chi2_independence",    # r x c categorical association
-        "psi_drift",            # population-stability scorecard drift
-        "cusum_changepoint",    # mean-shift localization
-        "funnel_conversion",    # ordered-funnel product analytics
-        "km_survival",          # Kaplan-Meier censored retention
-        "seasonal_anomaly",     # DOW-decomposed robust anomaly fence
-        "prefix_filter",        # exact all-pairs Jaccard (PPJoin)
-        "ann_pq_topk",          # product-quantization ADC scan
-        "ann_ivf_pq_topk",      # IVF-PQ composed residual ANN
-        "textrank_summary",     # sentence-PageRank extractive summary
-        "bm25_prf",             # RM3 pseudo-relevance-feedback 2-pass
-        "llr_keywords",         # Dunning G2 distinctive vocabulary
-        "cocitation",           # shared-endorser related-domain pairs
-        "session_paths",        # sessionized navigation-path mining
-        # round-3 session-O additions (appended for the same reason)
-        "bowtie_structure",     # Broder bow-tie web macro-structure
-        "ddsketch_quantiles",   # mergeable relative-error quantiles
-        "gsp_patterns",         # frequent sequential patterns
-        "texttile_segments",    # TextTiling topic valleys
-        "extract_figures",      # LAION-style image-text pair mining
-        "interleaved_media",    # MMC4-style interleaved export
-        "posting_stats",        # d-gap VByte index sizing
-        "stream_session_windows",  # native streaming session windows
-        "stream_static_join",   # stream-static broadcast enrichment
-        "stream_stream_join",   # watermarked interval join
-        "multimodal_jpeg",      # from-scratch baseline JPEG decode
-        "wds_roundtrip",        # WebDataset tar-shard storage loop
-        "warc_revisit_roundtrip",  # archive-level dedup storage
-        "proximity_topk",       # minimal-window SpanNear ranking
-        "wordpiece_apply",      # WordPiece greedy tokenizer
-        "burst_windows",        # anchored sliding burst metric
-        "hll_distinct",         # from-scratch oracle-able HLL
-        "sketch_ks_drift",      # KS drift on DDSketch states
-        "rfm_segments",         # exact rank-binned RFM grid
-        # round-4 additions (appended for the same reason)
-        "text_embed",           # in-engine deterministic text embedder
-        "extract_embed_semdedup",  # extract -> embed -> SemDeDup loop
-        "schema_evolution",     # field-id evolution on the WAP protocol
-        "hidden_partition_prune",  # transform-spec pruned reads
-        "curate_semantic",      # curation composite + SemDeDup tail
-        "dense_maxp_topk",      # passage-max dense retrieval
-        "triplet_mining",       # contrastive hard-negative mining
-        "bucketed_join",        # co-located zero-shuffle join
-        "stream_text_embed",    # embedder on the streaming path
-        # round-5 additions (appended for the same reason)
-        "stats_prune",          # per-file min/max data skipping
-        "maxp_quality",         # planted-relevance recall@5 audit
-        "stats_prune_range",    # interval data skipping (overlap test)
-    ]
+    headline = headline_queries(E)
     # Headline queries run ONCE each by default (override with
     # SPARK_GRAFT_BENCH_QUERY_REPEATS): at 125+ queries the best-of-2
     # policy doubled suite wall past the per-round bench budget, and
@@ -365,6 +159,10 @@ def main() -> None:
             dt = _time_query(name)
             best = dt if best is None or dt < best else best
         timings[name] = round(best, 3)
+    # the timings before re-timing (single shots at the default
+    # query_repeats=1): their total stays comparable with rounds that
+    # had no re-timing pass
+    raw_timings = dict(timings)
 
     # OUTLIER RE-TIMING (the r04 lesson): with single-shot timings a
     # transient host/GC window inflates a contiguous run of queries
@@ -406,6 +204,10 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "raw_value": round(sum(raw_timings.values()), 3),
+        "raw_queries": raw_timings,
+        # the host line as perfbench's host record reports it
+        "host": {"nproc": os.cpu_count(), "mem_total_mb": host_memory_mb()},
         "sf": sf,
         "docs_per_sec": docs_per_sec,
         "corpus_rows": n_docs,

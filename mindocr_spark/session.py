@@ -19,6 +19,7 @@ hosts with 64 GB or more at that old default.
 from __future__ import annotations
 
 import os
+import tempfile
 from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
@@ -110,7 +111,9 @@ def _pkg_zip_path() -> str:
         h.update(os.path.relpath(full, root).encode())
         with open(full, "rb") as fh:
             h.update(fh.read())
-    zip_path = os.path.join("/tmp", f"mindocr_spark_pkg_{h.hexdigest()[:16]}.zip")
+    zip_path = os.path.join(
+        tempfile.gettempdir(), f"mindocr_spark_pkg_{h.hexdigest()[:16]}.zip"
+    )
     if not os.path.exists(zip_path):
         tmp = f"{zip_path}.tmp{os.getpid()}"
         with zipfile.ZipFile(tmp, "w") as z:

@@ -29,7 +29,10 @@ def content_keyed_fixture_dir(
     (sf_dir + the listed module files): editing any generator module
     invalidates stale fixtures instead of silently reusing bytes built
     by older code. Shared by the WARC and JSONL fixture writers (the
-    pkg-zip staleness lesson, applied once)."""
+    pkg-zip staleness lesson, applied once). Concurrent callers with
+    the same key are serialized on ``<out_dir>.lock``, so the fixture
+    is built once."""
+    import fcntl
     import hashlib
     import os
 
@@ -56,10 +59,14 @@ def content_keyed_fixture_dir(
             h.update(mod_file.encode())
     out_dir = f"/tmp/{prefix}_{h.hexdigest()[:10]}"
     marker = os.path.join(out_dir, "_FIXTURE_COMPLETE")
-    if not os.path.exists(marker):
-        build(out_dir)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    # one builder per key across processes: a second caller waits for
+    # the first build and then finds its marker
+    with open(f"{out_dir}.lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if not os.path.exists(marker):
+            build(out_dir)
+            with open(marker, "w") as fh:
+                fh.write("ok")
     return out_dir
 from mindocr_spark.sources.golden_tsv import read_golden_tsv, write_golden_tsv
 from mindocr_spark.sources.lineage import (

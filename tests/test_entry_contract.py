@@ -110,27 +110,80 @@ def test_first_fifty_queries_span_every_family(entrymod):
 
 
 def test_gate_rotation_advances_coverage(entrymod):
-    """The rotation contract: the head window is dominated by queries
-    no committed CORRECTNESS_r*.json artifact has covered yet (>= 40
-    when the pool allows), so every registry entry earns a
-    driver-checked row within a few rounds."""
+    """The rotation contract: the head window is the 40-entry rotated
+    slice of never-checked queries, one already-checked anchor for each
+    family that slice misses, then more never-checked queries — so
+    exactly 50 - n_anchors fresh entries when the pool allows, and
+    every registry entry earns a driver-checked row within a few
+    rounds."""
     import glob
+    import hashlib
     import json
     import os
+    import re
 
     here = os.path.dirname(os.path.abspath(entrymod.__file__))
     checked: set[str] = set()
+    rounds = []
     for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
         with open(p) as f:
             checked |= set(json.load(f))
+        rounds.append(int(re.search(r"r(\d+)", os.path.basename(p))[1]))
     if not checked:
-        import pytest as _pytest
-
-        _pytest.skip("fresh checkout: no artifacts, no rotation")
-    head = list(entrymod.queries())[:50]
-    pool_size = len(set(entrymod.queries()) - checked)
+        pytest.skip("fresh checkout: no artifacts, no rotation")
+    qs = entrymod.queries()
+    head = list(qs)[:50]
+    pool = sorted(set(qs) - checked,
+                  key=lambda n: hashlib.md5(n.encode()).hexdigest())
+    start = 40 * (max(rounds) + 1 - 5) % len(pool)
+    rotated = {pool[(start + i) % len(pool)]
+               for i in range(min(40, len(pool)))}
+    n_anchors = sum(
+        1 for members in entrymod._FAMILIES.values()
+        if not members & rotated and members & checked
+    )
+    assert n_anchors <= 10  # anchors fit beside the full rotated slice
     fresh = [n for n in head if n not in checked]
-    assert len(fresh) >= min(40, pool_size)
+    assert len(fresh) == min(50 - n_anchors, len(pool))
+
+
+def test_fresh_checkout_head_spans_every_family(entrymod, monkeypatch):
+    """With no CORRECTNESS_r*.json artifacts the head is one anchor per
+    family, then registry order — still every family in the first 50."""
+    monkeypatch.setattr(entrymod, "_correctness_artifacts", lambda: [])
+    order = list(entrymod.queries())
+    first50 = set(order[:50])
+    for family, members in entrymod._FAMILIES.items():
+        assert first50 & members, f"family {family} absent from first 50"
+    n_anchors = len(entrymod._FAMILIES)
+    rest = [n for n in entrymod._REGISTRY if n not in order[:n_anchors]]
+    assert order[n_anchors:] == rest
+
+
+def test_registry_integrity(entrymod):
+    """One record per builder: every record has an oracle, no name or
+    builder is registered twice, and bench.py's exclusions exist."""
+    import collections
+    import os
+    import sys
+
+    reg = entrymod._REGISTRY
+    for name, rec in reg.items():
+        assert isinstance(rec.oracle, str) and rec.oracle.strip(), name
+    with pytest.raises(ValueError, match="registered twice"):
+        entrymod.query(next(iter(reg)), oracle="SELECT 1")(lambda s, d: None)
+    builders = collections.Counter(rec.builder.__name__
+                                   for rec in reg.values())
+    assert max(builders.values()) == 1
+    defined = {n for n in dir(entrymod) if n.startswith("q_")}
+    assert set(builders) == defined
+    assert set(entrymod.oracle_sql()) == set(entrymod.queries()) == set(reg)
+
+    sys.path.insert(0, os.path.dirname(os.path.abspath(entrymod.__file__)))
+    import bench
+
+    assert set(bench.HEADLINE_EXCLUDED) <= set(reg)
+    assert len(set(bench.HEADLINE_EXCLUDED)) == len(bench.HEADLINE_EXCLUDED)
 
 
 def test_corpus_rollup_subtotals_are_consistent(spark):

@@ -1,5 +1,8 @@
 """Driver-memory sizing of ``get_spark``: a host-sized default that the
-environment variable overrides."""
+environment variable overrides; and where the shipped package zip is
+built."""
+
+import os
 
 from mindocr_spark.session import driver_memory, host_memory_mb
 
@@ -22,3 +25,15 @@ def test_driver_memory_env_override_wins():
 def test_session_driver_memory_is_the_sized_default(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.driver.memory") == driver_memory(host_memory_mb())
+
+
+def test_package_zip_lands_in_tmpdir(tmp_path, monkeypatch):
+    import tempfile
+
+    from mindocr_spark.session import _pkg_zip_path
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    path = _pkg_zip_path()
+    assert os.path.dirname(path) == str(tmp_path)
+    assert os.path.isfile(path)
